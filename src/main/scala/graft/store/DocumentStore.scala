@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,37 +22,21 @@ import org.apache.spark.sql.types.MapType
   * A per-version (guid, hash) summary makes change detection a join against
   * a narrow table instead of a re-read of the previous documents.
   *
-  * FILESYSTEM CONTRACT (decided policy, VERDICT r4 #6): the store's
-  * correctness rests on ATOMIC RENAME for its metadata pointers
-  * (`_CURRENT`, `_NBUCKETS`, `_FORMAT`) and on a single writer. That holds
-  * on POSIX local disk and on HDFS; it does NOT hold on eventual-rename
-  * object stores (S3), where the production answer is a table format
-  * (Iceberg/Delta) whose commit protocol replaces these pointers. The
-  * metadata layer therefore deliberately uses java.nio with ATOMIC_MOVE —
-  * porting just the listing calls to Hadoop's FileSystem would widen the
-  * accepted URIs without delivering the atomicity the design needs, i.e.
-  * make it LOOK portable while being subtly unsafe. Data paths that only
-  * enumerate/append/delete (the streaming dedup stores, parquet part
-  * detection in StreamingJobs) DO use the Hadoop FS API and are
-  * remote-safe. */
+  * FILESYSTEM CONTRACT: the metadata pointers (`_CURRENT`, `_NBUCKETS`,
+  * `_FORMAT`) are [[Pointer]]s, so the store is local-only with a single
+  * writer, as stated there. Data paths that only enumerate, append or
+  * delete (the streaming dedup stores, parquet part detection in
+  * StreamingJobs) use the Hadoop FS API and are remote-safe. */
 class DocumentStore(spark: SparkSession, path: String, nBuckets: Int = 32) {
-  private val root = Paths.get(path)
+  private val root = Pointer.localDir(path)
   Files.createDirectories(root)
-  private def pointer = root.resolve("_CURRENT")
 
   // the bucket count is a physical property of the layout: persist it at
   // first write and ADOPT the stored value on reopen — a caller passing a
   // different nBuckets must not silently mis-route guids to wrong buckets
-  private val bucketsFile = root.resolve("_NBUCKETS")
   private val effectiveBuckets: Int =
-    if (Files.exists(bucketsFile)) Files.readString(bucketsFile).trim.toInt
-    else {
-      // same tmp+atomic-move discipline as the _CURRENT pointer: a crash
-      // mid-write must not leave a partial file that bricks the store
-      val tmp = root.resolve("_NBUCKETS.tmp")
-      Files.writeString(tmp, nBuckets.toString)
-      Files.move(tmp, bucketsFile, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+    Pointer.read(root, "_NBUCKETS").map(_.toInt).getOrElse {
+      Pointer.write(root, "_NBUCKETS", nBuckets.toString)
       nBuckets
     }
 
@@ -65,25 +49,17 @@ class DocumentStore(spark: SparkSession, path: String, nBuckets: Int = 32) {
   // silently treat every guid as changed), but the pruned apply path is
   // refused (its summaries lack the descendant index) until a full write()
   // upgrades the store. A fresh store is v2 from the start. ---
-  private val formatFile = root.resolve("_FORMAT")
   private def markFormat(): Unit =
-    if (!Files.exists(formatFile)) {
-      val tmp = root.resolve("_FORMAT.tmp")
-      Files.writeString(tmp, "2")
-      Files.move(tmp, formatFile, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (Pointer.read(root, "_FORMAT").isEmpty)
+      Pointer.write(root, "_FORMAT", "2")
   if (currentVersion.isEmpty) markFormat() // fresh store: all writes are v2
 
   /** 2 when every hash summary is bucket-partitioned with a breadcrumb
     * index (pruned reads are safe); 1 for a store begun by older code. */
-  def formatVersion: Int =
-    if (Files.exists(formatFile)) Files.readString(formatFile).trim.toInt
-    else 1
+  def formatVersion: Int = Pointer.read(root, "_FORMAT").fold(1)(_.toInt)
 
   def currentVersion: Option[Long] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim.toLong)
-    else None
+    Pointer.read(root, "_CURRENT").map(_.toLong)
 
   // --- manifest: one line per bucket, "bucket=version" ---
   private def manifestPath(v: Long) = root.resolve(s"manifest-$v.txt")
@@ -248,7 +224,8 @@ class DocumentStore(spark: SparkSession, path: String, nBuckets: Int = 32) {
     Files.writeString(root.resolve(s"schema-$next.json"), docs.schema.json)
     writeManifest(next, (0 until effectiveBuckets).map(_ -> next).toMap)
     markFormat() // a full write leaves every summary bucketed+indexed → v2
-    flip(next)
+    Pointer.write(root, "_CURRENT", next.toString)
+    next
   }
 
   /** Bucket-local write: only buckets containing a changed/deleted guid are
@@ -277,7 +254,8 @@ class DocumentStore(spark: SparkSession, path: String, nBuckets: Int = 32) {
         val prev = readManifest(v)
         writeManifest(next,
           prev ++ changedBuckets.map(_ -> next))
-        flip(next)
+        Pointer.write(root, "_CURRENT", next.toString)
+        next
     }
 
   /** Detect changes and write them bucket-locally in one call (docs =
@@ -323,13 +301,5 @@ class DocumentStore(spark: SparkSession, path: String, nBuckets: Int = 32) {
         Files.deleteIfExists(manifestPath(dv))
         Files.deleteIfExists(root.resolve(s"schema-$dv.json"))
       }
-  }
-
-  private def flip(next: Long): Long = {
-    val tmp = root.resolve("_CURRENT.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
   }
 }

@@ -1,6 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -14,22 +14,20 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * is the one shape that cannot ship — the index is built once, versioned,
   * and served many times.
   *
-  * Layout: `v<N>/<part>/` parquet directories plus a `_CURRENT` pointer
-  * flipped by atomic rename — the [[DocumentStore]] metadata contract
-  * (single writer; POSIX/HDFS rename atomicity; an object store wants a
-  * table format instead). A model version is SELF-CONTAINED: every part is
-  * rewritten on save (models are small — vocabulary / k·dim / m·k·sub
-  * bounded — so there is nothing to share across versions, unlike document
-  * buckets). A crashed save leaves `_CURRENT` on the previous complete
-  * version; a half-written v<N> dir is invisible and overwritten by the
-  * next save. Parquet round-trips preserve doubles and longs bit-exactly,
-  * so serving from the store is bit-identical to serving the in-memory
-  * training output (ModelStoreSpec pins this byte-for-byte).
+  * Layout: `v<N>/<part>/` parquet directories plus a `_CURRENT`
+  * [[Pointer]] (see its FILESYSTEM CONTRACT: local, single writer). A
+  * model version is SELF-CONTAINED: every part is rewritten on save
+  * (models are small — vocabulary / k·dim / m·k·sub bounded — so there is
+  * nothing to share across versions, unlike document buckets). A crashed
+  * save leaves `_CURRENT` on the previous complete version; a
+  * half-written v<N> dir is invisible and overwritten by the next save.
+  * Parquet round-trips preserve doubles and longs bit-exactly, so serving
+  * from the store is bit-identical to serving the in-memory training
+  * output (ModelStoreSpec pins this byte-for-byte).
   */
 class ModelStore(spark: SparkSession, path: String) {
-  private val root = Paths.get(path)
+  private val root = Pointer.localDir(path)
   Files.createDirectories(root)
-  private def pointer = root.resolve("_CURRENT")
 
   /** The store's root directory — the cache key for per-version
     * metadata (a saved version is immutable, so (rootPath, version)
@@ -37,8 +35,7 @@ class ModelStore(spark: SparkSession, path: String) {
   private[graft] def rootPath: String = root.toAbsolutePath.toString
 
   def currentVersion: Option[Long] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim.toLong)
-    else None
+    Pointer.read(root, "_CURRENT").map(_.toLong)
 
   private def partDir(v: Long, part: String) =
     root.resolve(s"v$v").resolve(part)
@@ -154,12 +151,12 @@ class ModelStore(spark: SparkSession, path: String) {
         Duration.Inf)
       settled.collectFirst { case scala.util.Failure(e) => throw e }
     }
-    val v = flip(next)
+    Pointer.write(root, "_CURRENT", next.toString)
     copiedFrames.foreach { case (name, schema) =>
-      ModelStore.loadCache.computeIfAbsent((spark, rootPath, v, name),
-        _ => spark.read.schema(schema).parquet(partDir(v, name).toString))
+      ModelStore.loadCache.computeIfAbsent((spark, rootPath, next, name),
+        _ => spark.read.schema(schema).parquet(partDir(next, name).toString))
     }
-    v
+    next
   }
 
   /** Copy `from`'s CURRENT version into this store as a new version —
@@ -236,14 +233,6 @@ class ModelStore(spark: SparkSession, path: String) {
       ModelStore.loadCache.computeIfAbsent(
         (spark, rootPath, v, part), _ => spark.read.parquet(dir.toString))
     else spark.read.parquet(dir.toString)
-  }
-
-  private def flip(next: Long): Long = {
-    val tmp = root.resolve("_CURRENT.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
   }
 
   /** Every version present on disk (ascending) — complete and

@@ -9,8 +9,8 @@ import graft.store.ModelStore
   * no shared fencing or crash story. A run tag binds both under ONE
   * fenced name: [[tagRun]] writes the same name into the release tag
   * store (corpus as-of batch) and the index tag store ((as-of batch,
-  * version) pair), each write crash-atomic on its own (pointer-file
-  * rename). Cross-store atomicity is BY REFUSAL, not by transaction:
+  * version) pair), each write crash-atomic on its own ([[SnapshotTags]]
+  * pointers). Cross-store atomicity is BY REFUSAL, not by transaction:
   * [[resolveRun]] requires the name present in BOTH stores and refuses
   * a half-tagged run loudly — a crash between the two writes is
   * visible on the next resolve, never half-served. The write order
@@ -53,7 +53,6 @@ object RunTags {
       releaseTagPath: String, corpusBatch: Long,
       indexTagPath: String, indexBatch: Long,
       indexVersion: Long): Unit = {
-    StreamingRelease.validTag(name) // fence before any write
     val nonce = Some(runNonce(corpusBatch, indexBatch, indexVersion))
     StreamingAnn.tagIndexSnapshot(spark, indexTagPath, name,
       indexBatch, indexVersion, nonce)
@@ -70,7 +69,7 @@ object RunTags {
   def resolveRun(spark: SparkSession, name: String,
       releaseTagPath: String, indexTagPath: String)
       : (Long, Long, Long) = {
-    val n = StreamingRelease.validTag(name)
+    val n = SnapshotTags.valid(name)
     def half[T](read: => T): Option[T] =
       try Some(read)
       catch { case _: IllegalArgumentException => None }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.llm.TextOps
-import graft.store.ModelStore
+import graft.store.{ModelStore, Pointer}
 
 /** Incremental CORPUS RELEASE (VERDICT r9 #4 / r10 #3): the streaming
   * twin of [[graft.llm.TextOps.corpusRelease]] — the reference's whole
@@ -327,47 +327,23 @@ object StreamingRelease {
   // which moves rows at batches ≤ B into the `batch=B` partition. That
   // breaks exactly one thing: an as-of cut BELOW B can no longer see
   // the folded rows' original batch numbers — so each fold records B
-  // in the store's `_folded_upto` marker (written BEFORE the fold:
-  // fail-closed — a crash between the two refuses reads the fold would
-  // have served, never serves reads it would have broken), and every
-  // as-of read refuses below it (the builder's documented choice; the
-  // alternative — snapshotting per-batch cuts — buys nothing the tag
-  // store does not already pin). Replay contract: like the hash-store
-  // fold, pick B strictly below the stream's replay horizon. ----
+  // in the store's `_folded_upto` [[graft.store.Pointer]] (written
+  // BEFORE the fold: fail-closed — a crash between the two refuses reads
+  // the fold would have served, never serves reads it would have
+  // broken), and every as-of read refuses below it (a documented
+  // choice; the alternative — snapshotting per-batch cuts — buys
+  // nothing the tag store does not already pin). Replay contract:
+  // like the hash-store fold, pick B strictly below the stream's replay
+  // horizon. ----
 
   /** The highest fold boundary ever applied to a ledger store, or None
     * when it was never folded. */
   def ledgerFoldBoundary(spark: SparkSession,
-      path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_folded_upto")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+      path: String): Option[Long] =
+    Pointer.read(Pointer.localDir(path), "_folded_upto").map(_.toLong)
 
-  private def writeFoldBoundary(spark: SparkSession, path: String,
-      b: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path, "_folded_upto.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(b.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // OVERWRITE rename, not delete-then-rename: a crash between those
-    // two would erase the PRIOR boundary and fail the as-of guard OPEN
-    // over already-folded rows (review r14) — the overwriting rename
-    // leaves either the old boundary or the new one, never none
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dir.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(path, "_folded_upto"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def writeFoldBoundary(path: String, b: Long): Unit =
+    Pointer.write(Pointer.localDir(path), "_folded_upto", b.toString)
 
   /** Fold ONE ledger store's batch dirs at or below `upToBatch` into a
     * single partition — target = the newest foldable batch, skipped
@@ -383,7 +359,7 @@ object StreamingRelease {
     val foldable = ids.filter(_ <= upToBatch)
     if (foldable.size < 2 || ids.max <= foldable.max) false
     else {
-      writeFoldBoundary(spark, path, foldable.max)
+      writeFoldBoundary(path, foldable.max)
       StreamingDedup.compactHashes(spark, path, foldable.max)
       true
     }
@@ -545,7 +521,7 @@ object StreamingRelease {
     if (foldable.size < 2 || ids.max <= foldable.max) false
     else {
       val target = foldable.max
-      writeFoldBoundary(spark, path, target)
+      writeFoldBoundary(path, target)
       def stamped(b: Long, dir: String): DataFrame = {
         // mergeSchema: a previously-folded dir holds its own original
         // file (no mbatch) plus appended folded files (mbatch set)
@@ -676,79 +652,20 @@ object StreamingRelease {
   // ---- NAMED SNAPSHOTS: a tag is a name for an as-of batch ("the
   // corpus training run 7 saw" = tag "run-7"), the git-tag discipline
   // over the time-travel reads: consumers pin tags, operators move
-  // them. A tag store is tiny parquet partitioned by tag name
-  // (tag=NAME/ → one batch value); re-tagging overwrites its own
-  // partition (the replay contract — a tag moves explicitly, like
-  // `git tag -f`, never by ambient race). ----
+  // them. Tags live in [[SnapshotTags]], shared with the index tier; a
+  // re-tag moves a tag explicitly, like `git tag -f`, never by ambient
+  // race. ----
 
-  /** Tag names interpolate into the partition path, so the charset is
-    * fenced (ADVICE r13): '/' or '=' would corrupt the hive layout,
-    * '..' could escape tagPath — and resolveTag's existence check
-    * would then pass for the escaped path. Validated on WRITE and
-    * READ (a store written before the fence still cannot be read
-    * through an escaping name). */
-  private[streaming] def validTag(tag: String): String = {
-    require(tag.matches("[A-Za-z0-9._-]+") && !tag.contains(".."),
-      s"bad snapshot tag '$tag': use [A-Za-z0-9._-]+ without '..'")
-    tag
-  }
-
-  /** Split a pointer-file payload into (value, generation nonce): the
-    * optional `#nonce` suffix is the [[graft.streaming.RunTags]]
-    * generation marker — both halves of one `tagRun` carry the same
-    * nonce, so a torn re-tag (old half + new half, each individually
-    * valid) is detectable. Single-store readers strip it; payloads
-    * written before the nonce (or by single-store tag calls) have
-    * none. */
-  private[streaming] def splitNonce(s: String): (String, Option[String]) =
-    s.split("#", 2) match {
-      case Array(v)    => (v.trim, None)
-      case Array(v, n) => (v.trim, Some(n.trim))
-    }
-
-  /** Fence a run-generation nonce: it rides inside the pointer payload,
-    * so the charset must not collide with the `#` separator or the
-    * whitespace the index pointer splits on. */
-  private[streaming] def validNonce(n: String): String = {
-    require(n.matches("[A-Za-z0-9._-]+"),
-      s"bad run nonce '$n': use [A-Za-z0-9._-]+")
-    n
-  }
-
-  /** Name an as-of batch. Stored as a one-line POINTER FILE promoted
-    * by an overwriting atomic rename (the `_CURRENT` discipline, same
-    * upgrade as [[graft.streaming.StreamingAnn.tagIndexSnapshot]] —
-    * ADVICE r14): a crash mid-retag leaves the old pointer or the new
-    * one, never an unreadable tag. Pre-r15 stores wrote parquet
-    * partition dirs; those still resolve, and the first re-tag
-    * upgrades them (that one retag is delete-then-rename). `nonce` is
-    * the [[graft.streaming.RunTags]] generation marker ([[splitNonce]]);
-    * single-store callers leave it None and the payload is unchanged
-    * from pre-nonce stores. */
+  /** Name an as-of batch: a [[SnapshotTags]] pointer whose payload is
+    * the batch. `nonce` is the [[graft.streaming.RunTags]] generation
+    * marker; single-store callers leave it None. */
   def tagSnapshot(spark: SparkSession, tagPath: String, tag: String,
-      batch: Long, nonce: Option[String] = None): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(tagPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val name = validTag(tag)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".tag-$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      (batch.toString + nonce.map(n => s"#${validNonce(n)}").getOrElse(""))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new org.apache.hadoop.fs.Path(dir, s"tag=$name")
-    if (fs.exists(dest) && fs.getFileStatus(dest).isDirectory)
-      fs.delete(dest, true)
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dir.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      batch: Long, nonce: Option[String] = None): Unit =
+    SnapshotTags.write(tagPath, tag, Seq(batch), nonce)
 
   /** Resolve a tag to its as-of batch; unknown tags fail loudly (a
     * consumer pinning a tag that does not exist must not silently read
-    * the present). Reads both formats (pointer file; pre-r15 parquet
-    * dir). */
+    * the present). */
   def resolveTag(spark: SparkSession, tagPath: String,
       tag: String): Long =
     resolveTagWithNonce(spark, tagPath, tag)._1
@@ -757,40 +674,19 @@ object StreamingRelease {
     * for pre-nonce payloads, parquet-dir tags, and single-store tags) —
     * the [[graft.streaming.RunTags.resolveRun]] torn-re-tag check. */
   def resolveTagWithNonce(spark: SparkSession, tagPath: String,
-      tag: String): (Long, Option[String]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$tagPath/tag=${validTag(tag)}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"unknown snapshot tag '$tag' under $tagPath")
-    if (fs.getFileStatus(p).isDirectory)
-      (spark.read.parquet(p.toString).select("batch").head().getLong(0),
-        None)
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      val (v, n) = splitNonce(s)
-      (v.toLong, n)
+      tag: String): (Long, Option[String]) =
+    SnapshotTags.read(spark, tagPath, tag, Seq("batch")) match {
+      case Some((Seq(batch), nonce)) => (batch, nonce)
+      case _ => throw new IllegalArgumentException(
+        s"unknown snapshot tag '$tag' under $tagPath")
     }
-  }
 
   /** Every as-of batch named by any tag under `tagPath` — the pin set
     * the LEDGER FOLD floors at so tagged snapshots stay servable
     * ([[compactReleaseLedgers]]), the release-side symmetry of
-    * [[graft.streaming.StreamingAnn.taggedIndexVersions]]. One driver
-    * listing + one tiny read per tag; an existing-but-empty dir is NO
-    * tags; a concurrent re-tag is invisible (each pointer read sees
-    * its old or new value, never a missing one). */
-  def taggedBatches(spark: SparkSession, tagPath: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(tagPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(_.getPath.getName.startsWith("tag="))
-      .map(s => resolveTag(spark, tagPath,
-        s.getPath.getName.stripPrefix("tag=")))
-      .toSet
-  }
+    * [[graft.streaming.StreamingAnn.taggedIndexVersions]]. */
+  def taggedBatches(spark: SparkSession, tagPath: String): Set[Long] =
+    SnapshotTags.all(spark, tagPath, Seq("batch")).map(_.head).toSet
 
   /** The manifest at a NAMED snapshot — [[releaseManifest]] with the
     * tag resolved to its as-of batch. */

@@ -11,7 +11,6 @@ import graft.store.ModelStore
   * serving from the store is bit-identical to the train-inline path
   * (the oracle gate additionally pins the persisted queries against the
   * in-query oracles at sf0.01). */
-@SlowTest
 class ModelStoreSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -76,7 +75,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("persisted IVF-PQ index serves bit-identically to the in-query search") {
+  test("persisted IVF-PQ index serves bit-identically to the in-query search", Slow) {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val inline = llm.Similarity.ivfPqSearch(emb).collect().map(_.toString)
     withStore { store =>
@@ -93,7 +92,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("annRecall: monotone in nprobe; recall >= 0.8 at the exhaustive probe (sf0.01)") {
+  test("annRecall: monotone in nprobe; recall >= 0.8 at the exhaustive probe (sf0.01)", Slow) {
     // the r8 measurement surfaced recall 0.1–0.2, NON-monotone in
     // nprobe: ADC ranked by squared L2 over unnormalized vectors while
     // truth is cosine. Normalize-at-ingest plus the per-cell-shortlist
@@ -113,7 +112,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("annRecallAuto: sqrt(N) dial, sample-trained, spilled, monotone, recall >= 0.9 in the sweep at every SF") {
+  test("annRecallAuto: sqrt(N) dial, sample-trained, spilled, monotone, recall >= 0.9 in the sweep at every SF", Slow) {
     // the production dials (VERDICT r9 #2, r10 #1): nlist =
     // clamp(ceil(sqrt(N)), 4, trainN/39) over a quantizer trained on the
     // vec_id % 2 != 0 slice only, with each vector spilled into its
@@ -144,7 +143,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("residual-PQ recall dominates raw-PQ recall at every swept nprobe (the FAISS residual-encoding claim)") {
+  test("residual-PQ recall dominates raw-PQ recall at every swept nprobe (the FAISS residual-encoding claim)", Slow) {
     // same dials, same probe budget, same storage: the residual
     // distribution is tighter than the raw one, so m·log2(k) bits
     // quantize it with less error and the ADC shortlist keeps more
@@ -166,7 +165,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("cross-variant serving refuses: raw paths reject a residual store and vice versa") {
+  test("cross-variant serving refuses: raw paths reject a residual store and vice versa", Slow) {
     // raw ADC tables scored against residual codes (or vice versa)
     // return silently wrong neighbors — the guard must fail LOUD
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -200,7 +199,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy store layout (codes without cid) serves identically through the join fallback") {
+  test("legacy store layout (codes without cid) serves identically through the join fallback", Slow) {
     // indexes written before the cell-partitioned codes layout carry a
     // separate (vec_id, cid) cells part and a cid-less codes part —
     // codedFrame must serve them through the join, bit-identically
@@ -226,7 +225,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("residual shards merge and serve bit-identically to a single residual build") {
+  test("residual shards merge and serve bit-identically to a single residual build", Slow) {
     // saveMergedIndex is variant-agnostic: shards produced by
     // encodeForIndex against the store's own quantizers match its
     // variant by construction, and the union write carries the dials
@@ -258,7 +257,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("merged parallel-encoded shards serve bit-identically to a single build; overlap refused") {
+  test("merged parallel-encoded shards serve bit-identically to a single build; overlap refused", Slow) {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qv = llm.Similarity.queryVecOf(emb, 0L)
     // single build at a SPILLED dial — the merge must respect spill in
@@ -291,7 +290,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("batched IVF-PQ serve equals the single-query path, query by query") {
+  test("batched IVF-PQ serve equals the single-query path, query by query", Slow) {
     // the batch path replaces the driver-side probe/distance-table steps
     // with relational joins; at equal dials the two must serve the same
     // neighbors with the same scores
@@ -327,7 +326,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("batched RESIDUAL serve equals the residual single-query path, query by query") {
+  test("batched RESIDUAL serve equals the residual single-query path, query by query", Slow) {
     // the residual twin of the raw batch==single gate: per-(query, cell)
     // residual distance tables as relational joins must reproduce the
     // driver-side per-cell tables of ivfPqSearchResidualPersisted
@@ -371,7 +370,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("exhaustive probe + corpus-wide rerank equals brute-force cosine top-k") {
+  test("exhaustive probe + corpus-wide rerank equals brute-force cosine top-k", Slow) {
     // nprobe = kCells probes every cell and rerankK >= |corpus| reranks
     // every candidate exactly — the IVF and PQ layers both prune
     // nothing, so the search must return exactly the brute-force cosine
@@ -407,7 +406,7 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy-store dials are derived from the artifacts, never hard-coded guesses") {
+  test("legacy-store dials are derived from the artifacts, never hard-coded guesses", Slow) {
     // ADVICE r12: the synthesized legacy dials hard-coded m=4/k=8/dim=64;
     // a legacy index built at other dials got a persisted record that
     // lied to every future reader. Build at NON-default dials, strip the

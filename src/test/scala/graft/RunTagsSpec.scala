@@ -11,7 +11,6 @@ import graft.streaming.{RunTags, StreamingAnn, StreamingRelease}
   * reads are bit-identical to the two single-store reads; a
   * half-tagged name (a crashed tagRun) refuses loudly instead of
   * silently mixing runs; a re-tag moves both halves. */
-@SlowTest
 class RunTagsSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -20,7 +19,7 @@ class RunTagsSpec extends AnyFunSuite {
     .select("doc_id", "lang", "text")
   private val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
-  test("run tag: composite reads == single-store reads bit-identically; re-tag moves both; half-tagged and unknown names refuse; names fenced") {
+  test("run tag: composite reads == single-store reads bit-identically; re-tag moves both; half-tagged and unknown names refuse; names fenced", Slow) {
     val dirs = Seq("lm", "hash", "score", "reltag", "store", "codes",
       "idxtag").map(s => Files.createTempDirectory(s"graft-run-$s-"))
     val Seq(lmDir, hashDir, scoreDir, relTagDir, storeDir, codesDir,
@@ -169,6 +168,47 @@ class RunTagsSpec extends AnyFunSuite {
         "legacy", 4L, 8L, Some("4.4.8"))
       assert(intercept[IllegalArgumentException](resolve("legacy"))
         .getMessage.contains("torn"))
+    } finally dirs.foreach(ModelStore.deleteRecursively)
+  }
+
+  test("re-tagging in a loop never hides the tag from a concurrent pin-set read, on either tier") {
+    val dirs = Seq("reltag", "idxtag")
+      .map(s => Files.createTempDirectory(s"graft-retag-$s-"))
+    val Seq(relTagDir, idxTagDir) = dirs
+    // one thread re-tags `run-1` to the same value 2,000 times while
+    // another reads the pin set; a GC or fold reading a set without
+    // the value would reclaim what the tag protects
+    def race(retag: () => Unit, pins: () => Set[Long],
+        pinned: Long): String = {
+      retag()
+      @volatile var done = false
+      var (reads, missed, example) = (0L, 0L, "")
+      val reader = new Thread(() =>
+        while (!done) {
+          val miss =
+            try Some(pins()).filterNot(_.contains(pinned)).map(_.toString)
+            catch { case e: Exception => Some(e.toString) }
+          miss.foreach { m => missed += 1; example = m }
+          reads += 1
+        })
+      reader.start()
+      try (1 to 2000).foreach(_ => retag())
+      finally { done = true; reader.join() } // join publishes the counts
+      assert(reads > 0)
+      if (missed == 0) ""
+      else s"$missed of $reads reads missed it, e.g. $example"
+    }
+    try {
+      val index = race(() => StreamingAnn.tagIndexSnapshot(spark,
+          idxTagDir.toString, "run-1", 3L, 7L),
+        () => StreamingAnn.taggedIndexVersions(spark, idxTagDir.toString),
+        7L)
+      val release = race(() => StreamingRelease.tagSnapshot(spark,
+          relTagDir.toString, "run-1", 5L),
+        () => StreamingRelease.taggedBatches(spark, relTagDir.toString),
+        5L)
+      assert(index.isEmpty && release.isEmpty,
+        s"taggedIndexVersions: $index; taggedBatches: $release")
     } finally dirs.foreach(ModelStore.deleteRecursively)
   }
 }

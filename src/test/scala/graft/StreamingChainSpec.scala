@@ -10,7 +10,6 @@ import graft.streaming.StreamingJobs
   * change messages → document store via foreachBatch (SURVEY §0 diagram,
   * streaming form). This is the pipeline a user of the reference would run
   * instead of its four Flink processes. */
-@SlowTest
 class StreamingChainSpec extends AnyFunSuite {
   import SparkTestSession._
   import RowSeqOps._
@@ -24,7 +23,7 @@ class StreamingChainSpec extends AnyFunSuite {
        |"createTime":1,"updateTime":$t}}""".stripMargin.replaceAll("\n", "")
   }
 
-  test("poisoned rows land in the per-job DLQ while the rest of the batch commits (S10 jobs 2-4)") {
+  test("poisoned rows land in the per-job DLQ while the rest of the batch commits (S10 jobs 2-4)", Slow) {
     import spark.implicits._
     def emptyDocs = {
       val creates = Seq.empty[(String, String, String, String, Long,
@@ -75,7 +74,7 @@ class StreamingChainSpec extends AnyFunSuite {
     assert(byJob.count(_ == ("determine_change", "unknown operationType")) == 2)
   }
 
-  test("full streaming chain: relationships, cross-batch diff, bucket-local commits") {
+  test("full streaming chain: relationships, cross-batch diff, bucket-local commits", Slow) {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-full").toString
@@ -152,7 +151,7 @@ class StreamingChainSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("fullChain restarts from checkpoint and continues cross-batch state") {
+  test("fullChain restarts from checkpoint and continues cross-batch state", Slow) {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-restart").toString
@@ -191,7 +190,83 @@ class StreamingChainSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
-  test("raw JSON stream drives the doc store through stateful diff") {
+  test("fullChain converges after a crash between the document commit and the version append") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    def emptyDocs = {
+      val creates = Seq.empty[(String, String, String, String, Long,
+          Map[String, String], String, Boolean, Boolean)]
+        .toDF("guid", "typeName", "qualifiedName", "eventType", "seq",
+          "attributes", "parentGuid", "parentRemoved", "directChange")
+        .withColumn("name", lit(null).cast("string"))
+        .withColumn("definition", lit(null).cast("string"))
+        .withColumn("email", lit(null).cast("string"))
+      graft.docs.DocumentAlgebra.createDocs(creates)
+    }
+    val child = rawEvent("gE", "ENTITY_CREATE", 110L, "m4i_data_entity",
+      Map("qualifiedName" -> "ent", "name" -> "Ent")).replace(
+      """"relationshipAttributes":{}""",
+      """"relationshipAttributes":{"parent":[{"guid":"gD",""" +
+        """"typeName":"m4i_data_domain","entityStatus":"ACTIVE"}]}""")
+    val first = Seq(
+      rawEvent("gD", "ENTITY_CREATE", 100L, "m4i_data_domain",
+        Map("qualifiedName" -> "dom", "name" -> "Dom")),
+      child, "garbage not json")
+    // the rename cascades into gE's breadcrumb on top of the replayed state
+    val second = Seq(rawEvent("gD", "ENTITY_UPDATE", 200L,
+      "m4i_data_domain", Map("qualifiedName" -> "dom", "name" -> "Dom2")))
+    // map columns compare by sorted entries, whatever order built them
+    def canonical(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.schema.fields.toSeq.sortBy(_.name).map { f =>
+        f.dataType match {
+          case _: org.apache.spark.sql.types.MapType =>
+            array_sort(map_entries(col(f.name))).as(f.name)
+          case _ => col(f.name)
+        }
+      }: _*).toJSON.collect().toSeq.sorted
+
+    /** Runs the two batches with a restart between them; with `crash`,
+      * a plain file at versionsPath fails the first version append after
+      * the document commit, and is removed before the restart. */
+    def run(crash: Boolean): (Seq[String], Seq[String]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-replay")
+      val versions = dir.resolve("versions")
+      val store = new graft.store.DocumentStore(spark, s"$dir/store")
+      val input = MemoryStream[String]
+      def start() = StreamingJobs.fullChain(input.toDF(), versions.toString,
+        store, emptyDocs, s"$dir/dlq", s"$dir/ckpt").start()
+      if (crash) java.nio.file.Files.writeString(versions, "not parquet")
+      input.addData(first)
+      val q1 = start()
+      try {
+        if (crash) {
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+            q1.processAllAvailable())
+          assert(store.currentVersion.nonEmpty,
+            "the document commit should precede the failed append")
+          java.nio.file.Files.delete(versions)
+        } else q1.processAllAvailable()
+      } finally q1.stop()
+      val q2 = start()
+      try {
+        input.addData(second)
+        q2.processAllAvailable()
+      } finally q2.stop()
+      try (canonical(store.read().get),
+        canonical(graft.store.VersionedStore.latest(
+          graft.store.VersionedStore.read(spark, versions.toString))))
+      finally graft.store.ModelStore.deleteRecursively(dir)
+    }
+
+    val (docs, latest) = run(crash = false)
+    assert(docs.size == 2 && latest.size == 2)
+    assert(docs.exists(d => d.contains("\"gE\"") && d.contains("Dom2")))
+    val (crashedDocs, crashedLatest) = run(crash = true)
+    assert(crashedDocs == docs)
+    assert(crashedLatest == latest)
+  }
+
+  test("raw JSON stream drives the doc store through stateful diff", Slow) {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
