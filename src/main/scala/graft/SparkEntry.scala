@@ -219,7 +219,7 @@ object SparkEntry {
     "q_ann_recall" -> ((s, d) => llm.Similarity.annRecall(s, d)),
     "q_ann_recall_auto" -> ((s, d) => llm.Similarity.annRecallAuto(s, d)),
     "q_ann_recall_residual" ->
-      ((s, d) => llm.Similarity.annRecallResidual(s, d)),
+      ((s, d) => llm.Similarity.annRecall(s, d, variant = "residual")),
     "q_ann_residual_inc" ->
       (streaming.StreamingAnn.annResidualIncrementalQuery _),
     "q_ann_compacted" ->
@@ -228,10 +228,10 @@ object SparkEntry {
       (streaming.StreamingAnn.annCompactedResidualQuery _),
     "q_ann_deleted" ->
       (streaming.StreamingAnn.annDeletedQuery _),
-    "q_ann_filtered" ->
-      ((s, d) => llm.Similarity.annRecallFiltered(s, d)),
-    "q_ann_filtered_residual" ->
-      ((s, d) => llm.Similarity.annRecallFilteredResidual(s, d)),
+    "q_ann_filtered" -> ((s, d) => llm.Similarity.annRecall(s, d,
+      pred = Some(llm.Similarity.allowedThirds))),
+    "q_ann_filtered_residual" -> ((s, d) => llm.Similarity.annRecall(s,
+      d, variant = "residual", pred = Some(llm.Similarity.allowedThirds))),
     "q_ann_filtered_inc" ->
       (streaming.StreamingAnn.annFilteredIncrementalQuery _),
     "q_ann_asof" -> (streaming.StreamingAnn.annAsOfQuery _),
@@ -242,9 +242,9 @@ object SparkEntry {
       (streaming.StreamingAnn.annRunTaggedQuery _),
     "q_ann_autopilot" ->
       (streaming.StreamingAnn.annAutopilotQuery _),
-    "q_ann_range" -> (llm.Similarity.ivfPqRangeSearchQuery _),
+    "q_ann_range" -> ((s, d) => llm.Similarity.ivfPqRangeSearchQuery(s, d)),
     "q_ann_range_residual" ->
-      (llm.Similarity.ivfPqRangeSearchResidualQuery _),
+      ((s, d) => llm.Similarity.ivfPqRangeSearchQuery(s, d, "residual")),
     "q_ann_range_inc" ->
       (streaming.StreamingAnn.annRangeIncrementalQuery _),
     "q_ann_range_filtered" ->
@@ -256,7 +256,7 @@ object SparkEntry {
     "q_ann_range_residual_inc" ->
       (streaming.StreamingAnn.annRangeResidualIncrementalQuery _),
     "q_cosine_range" -> ((s, d) => llm.Similarity.cosineRange(s, d)),
-    "q_ivfpq_batch" -> (llm.Similarity.ivfPqKnnJoinQuery _),
+    "q_ivfpq_batch" -> ((s, d) => llm.Similarity.ivfPqKnnJoinQuery(s, d)),
     "q_ivfpq_batch_filtered" ->
       (llm.Similarity.ivfPqKnnJoinFilteredQuery _),
     "q_ivfpq_batch_deleted" ->
@@ -268,7 +268,7 @@ object SparkEntry {
     "q_ivfpq_batch_inc" ->
       (streaming.StreamingAnn.ivfPqBatchIncrementalQuery _),
     "q_ivfpq_batch_residual" ->
-      (llm.Similarity.ivfPqKnnJoinResidualQuery _),
+      ((s, d) => llm.Similarity.ivfPqKnnJoinQuery(s, d, "residual")),
     "q_bpe_persisted" -> ((s, d) => llm.TextOps.bpePersistedQuery(s, d)),
     "q_lm_persisted" -> (llm.TextOps.lmPersistedQuery _),
     "q_clf_persisted" -> (llm.Classifier.clfPersistedQuery _),
@@ -804,7 +804,7 @@ object SparkEntry {
   private lazy val corpusReleaseOracle: String = corpusReleaseOracleWhere()
 
   // residual IVF-PQ recall replay (q_ann_recall_residual; mirrors
-  // Similarity.saveIvfPqResidualIndex / annRecallResidual): the coarse
+  // Similarity.saveIvfPqIndex / annRecall, variant "residual"): the coarse
   // chain is the shared ivfAssignBody over the unit ex; the PQ rounds
   // train on rx = x − c_assigned (the FAISS residual semantics); the
   // serve builds a PER-CELL distance table (query residual differs per
@@ -1004,9 +1004,9 @@ object SparkEntry {
   private lazy val annRangeOracle: String = annRangeOracleWhere()
 
   // probed RANGE search over the RESIDUAL index (q_ann_range_residual;
-  // mirrors Similarity.ivfPqRangeSearchResidual at nprobe=2, minSim=0.2,
-  // slack=2.0): the shared residual chain, PER-CELL residual distance
-  // tables (rdt joins keyed on the candidate's own cell — the residual
+  // mirrors Similarity.ivfPqRangeSearch on a residual index at nprobe=2,
+  // minSim=0.2, slack=2.0): the shared residual chain, PER-CELL residual
+  // distance tables (rdt joins keyed on the candidate's own cell — the residual
   // wrinkle), candidates whose ROUNDED per-cell ADC clears the same
   // slackened global radius bound 3.2 the raw variant uses (the
   // residual ADC approximates the same ||q − x||²: the cell centroid
@@ -1119,7 +1119,7 @@ object SparkEntry {
     annRecallResidualOracleWhere()
 
   // batched residual serve replay (q_ivfpq_batch_residual; mirrors
-  // Similarity.ivfPqKnnJoinResidual over the first-8 query batch): the
+  // Similarity.ivfPqKnnJoin on a residual index, first-8 batch): the
   // shared residual chain, per-query probes (distances rounded to 9
   // before ranking — the cross-engine combine-order rule), PER-(query,
   // probed-cell) residual distance tables (the residual wrinkle: the

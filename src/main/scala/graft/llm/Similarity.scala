@@ -43,7 +43,7 @@ object Similarity {
 
   /** Brute-force cosine top-k against the query vector (vec_id = qId).
     * `pred` restricts the searched corpus (the filtered-truth arm of
-    * [[annRecallFiltered]] / the deleted-corpus truth of
+    * a filtered [[annRecall]] / the deleted-corpus truth of
     * `q_ann_deleted`); the default keeps every row. */
   def cosineTopK(spark: SparkSession, dir: String, qId: Long = 0L,
       k: Int = 10, pred: Column = lit(true)): DataFrame = {
@@ -693,33 +693,42 @@ object Similarity {
       .select("i", "x").collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
-  /** ADC scoring of a codes frame: the per-query m×k distance table is
+  /** ADC scoring of a codes frame: the per-query distance tables are
     * computed ON THE DRIVER with a fixed i-order fold (where a
-    * production ANN engine computes it, and the only summation order
+    * production ANN engine computes them, and the only summation order
     * both engines can pin), then joined broadcast per subspace; `adc`
-    * adds the m parts in fixed order. Shared by the full-corpus
-    * [[pqAdc]] and the cell-pruned [[ivfPqSearch]]. */
+    * adds the m parts in fixed order. The query side of each table is
+    * q itself, keyed by code — or, given `cells` (probed cell →
+    * centroid), q − c_cell per cell, keyed by (cid, code): a residual
+    * index encodes x − c_cell, so its tables differ per probed cell
+    * (nprobe·m·k entries instead of m·k). One scan of the codes either
+    * way, the SQL oracle's dt/rdt shapes. */
   private def adcScored(codes: DataFrame, cent: DataFrame,
-      qVec: Map[Int, Double], m: Int, sub: Int): DataFrame = {
+      qVec: Map[Int, Double], m: Int, sub: Int,
+      cells: Option[Seq[(Int, Array[Double])]] = None): DataFrame = {
     val spark = codes.sparkSession
-    val dtRows = cent.collect()
+    import spark.implicits._
+    val books = cent.collect()
       .groupBy(r => (r.getAs[Int]("s"), r.getAs[Int]("cid"))).toSeq
-      .map { case ((s, cid), rows) =>
-        val d = rows.sortBy(_.getAs[Int]("i")).foldLeft(0.0) { (acc, r) =>
-          val diff = qVec(s * sub + r.getAs[Int]("i")) -
-            r.getAs[Double]("c")
-          acc + diff * diff
-        }
-        (s, cid, d)
-      }
-    val scored = (0 until m).foldLeft(codes) { (df, s) =>
-      val dt = spark.createDataFrame(
-        dtRows.filter(_._1 == s).map { case (_, cid, d) => (cid, d) })
-        .toDF(s"c$s", s"d$s")
-      df.join(broadcast(dt), s"c$s")
+      .map { case (sc, rows) => sc -> rows.sortBy(_.getAs[Int]("i")) }
+    val sides: Seq[(Int, Int => Double)] = cells match {
+      case None => Seq(-1 -> (j => qVec.getOrElse(j, 0.0)))
+      case Some(cs) => cs.map { case (cid, cv) =>
+        cid -> ((j: Int) => qVec.getOrElse(j, 0.0) - cv(j)) }
     }
-    scored.withColumn("adc", round(
-      (0 until m).map(s => col(s"d$s")).reduce(_ + _), 9))
+    val dtRows = for ((cell, q) <- sides; ((s, code), rows) <- books)
+      yield (cell, s, code, rows.foldLeft(0.0) { (acc, r) =>
+        val diff = q(s * sub + r.getAs[Int]("i")) - r.getAs[Double]("c")
+        acc + diff * diff
+      })
+    (0 until m).foldLeft(codes) { (df, s) =>
+      val rows = dtRows.filter(_._2 == s)
+      val dt =
+        if (cells.isEmpty) rows.map(r => (r._3, r._4)).toDF(s"c$s", s"d$s")
+        else rows.map(r => (r._1, r._3, r._4)).toDF("cid", s"c$s", s"d$s")
+      df.join(broadcast(dt), dt.columns.init.toSeq)
+    }.withColumn("adc",
+      round((0 until m).map(s => col(s"d$s")).reduce(_ + _), 9))
   }
 
   /** IVF-PQ search — the production ANN composition, assembled from the
@@ -743,8 +752,8 @@ object Similarity {
     val cent = pqCodebooksFused(ex, m, k, iters, dim)
     val coded = assignCells(ex, coarse)
       .join(pqCodesOf(ex, cent, m, dim), "vec_id")
-    ivfPqSearchOver(coarse, coded, unitArrays(ex), cent, queryVec(ex, qId),
-      qId, topK, nprobe, m, dim, rerankK)
+    ivfPqSearchOver(IndexFrames(coarse, coded, unitArrays(ex), cent, "raw"),
+      queryVec(ex, qId), qId, topK, nprobe, m, dim, rerankK)
   }
 
   /** The `nprobe` nearest coarse cells to the query — kCells rows,
@@ -794,17 +803,31 @@ object Similarity {
   // once (or incrementally on ingest — see
   // [[graft.streaming.StreamingAnn]]) and every query after it touches
   // only nlist·dim + m·k·sub centroid rows and the probed cells' m-byte
-  // codes. ----
+  // codes.
+  //
+  // The ENCODING VARIANT is a value in the index's `dials` part, chosen
+  // once at build: "raw" PQ-encodes x, "residual" (the FAISS IVFPQ
+  // semantics) encodes r = x − c_cell(x). The residual distribution is
+  // tighter (the coarse quantizer already explained the cell-level
+  // structure), so the same m·log₂k bits quantize it with less error —
+  // measured: ADC-shortlist recall@10 0.7 → 0.9 at every nprobe on
+  // sf0.1, same storage. Every encode and serve reads the variant from
+  // the version it pinned; it decides three things only — the build's
+  // training order, the encode domain ([[encodeRows]]) and whether the
+  // ADC tables are keyed by subspace or by (cell, subspace)
+  // ([[adcScored]], [[ivfPqKnnJoinOver]]). ----
 
   /** Train the complete IVF-PQ index and persist every artifact. Parts:
     * "coarse" (cid, i, c), "cells" (vec_id, cid), "codebooks"
     * (s, cid, i, c), "codes" (vec_id, c0..c{m-1}), "vectors"
     * (vec_id, ux ARRAY<DOUBLE> — unit-domain full-precision vectors,
-    * the exact-rerank payload). Returns the store version written. */
+    * the exact-rerank payload), "dials". Returns the store version
+    * written. */
   def saveIvfPqIndex(emb: DataFrame, store: graft.store.ModelStore,
       kCells: Int = 4, m: Int = 4, k: Int = 8, iters: Int = 2,
-      dim: Int = 64): Long =
-    saveIvfPqIndexTrainedOn(emb, emb, store, kCells, m, k, iters, dim)
+      dim: Int = 64, variant: String = "raw"): Long =
+    saveIvfPqIndexTrainedOn(emb, emb, store, kCells, m, k, iters, dim,
+      variant = variant)
 
   /** Split-aware index build: train the quantizers on `trainEmb` only,
     * encode ALL of `encodeEmb` under them. This is the FAISS-style
@@ -816,45 +839,56 @@ object Similarity {
     * ([[graft.streaming.StreamingAnn.saveDriftReference]]; VERDICT r8
     * #1: an in-sample reference histogram made the gate fire on every
     * increment). Both frames go through the unit domain
-    * ([[explodeVecsUnit]]). */
+    * ([[explodeVecsUnit]]). `variant` is "raw" or "residual"
+    * ([[cellKeyed]] refuses anything else); a residual index is
+    * single-assigned (residual-of-THE-cell is what ADC corrects). */
   def saveIvfPqIndexTrainedOn(trainEmb: DataFrame, encodeEmb: DataFrame,
       store: graft.store.ModelStore, kCells: Int = 4, m: Int = 4,
       k: Int = 8, iters: Int = 2, dim: Int = 64, spill: Int = 1,
+      variant: String = "raw",
       extraParts: Map[String, DataFrame] = Map.empty): Long = {
-    val exT = explodeVecsUnit(trainEmb)
-    val ex = explodeVecsUnit(encodeEmb)
-    // the coarse quantizer and the PQ codebooks are INDEPENDENT
-    // training chains over the same exploded rows — overlap them
-    // (guide §2.6: actions are only sequential because the driver
-    // calls them sequentially); each chain's own Lloyd rounds stay
-    // sequential, so per-chain determinism is untouched
-    val (coarse, cent) = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = graft.store.ModelStore.trainEc
-      val fCoarse = Future(lloydCentroids(exT, kCells, iters))
-      val fCent = Future(pqCodebooksFused(exT, m, k, iters, dim))
-      (Await.result(fCoarse, Duration.Inf),
-        Await.result(fCent, Duration.Inf))
-    }
+    val (coarse, cent) =
+      if (cellKeyed(variant)) {
+        require(spill == 1, "residual indexes are single-assigned " +
+          "(spill=1): the residual-of-THE-cell is what ADC corrects")
+        // the codebooks train on x − c_cell(x): the coarse quantizer
+        // must exist first, so the two chains run in sequence
+        val exT = graft.Materialize.checkpoint(explodeVecsUnit(trainEmb))
+        val coarse = lloydCentroids(exT, kCells, iters)
+        val rxT = graft.Materialize.checkpoint(
+          residualRows(exT, assignCells(exT, coarse), coarse))
+        (coarse, pqCodebooksFused(rxT, m, k, iters, dim))
+      } else {
+        // the coarse quantizer and the PQ codebooks are INDEPENDENT
+        // training chains over the same exploded rows — overlap them
+        // (guide §2.6: actions are only sequential because the driver
+        // calls them sequentially); each chain's own Lloyd rounds stay
+        // sequential, so per-chain determinism is untouched
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        implicit val ec: ExecutionContext = graft.store.ModelStore.trainEc
+        val exT = explodeVecsUnit(trainEmb)
+        val fCoarse = Future(lloydCentroids(exT, kCells, iters))
+        val fCent = Future(pqCodebooksFused(exT, m, k, iters, dim))
+        (Await.result(fCoarse, Duration.Inf),
+          Await.result(fCent, Duration.Inf))
+      }
     // the index carries its own dials (the FAISS-header discipline):
-    // incremental encode and serve paths read spill from here instead
-    // of guessing it from the cells table's shape
+    // incremental encode and serve paths read spill and variant from
+    // here instead of guessing them from the artifacts' shape
     val dials = trainEmb.sparkSession.range(1).select(
       lit(kCells).as("nlist"), lit(spill).as("spill"), lit(m).as("m"),
       lit(k).as("k"), lit(iters).as("iters"), lit(dim).as("dim"),
-      lit("raw").as("variant"))
+      lit(variant).as("variant"))
     // ONE shared-exchange encode of the corpus, materialized once and
     // PROJECTED into the three data parts — previously each part's
     // write re-exploded and re-aggregated the corpus as its own action
     // (three full encode passes per build; guide §1.2: don't recompute
     // what you already have). Same groups, same terms — values are
     // bit-identical, the parts are column projections of one frame.
-    val exP = ex.repartition(col("vec_id"))
-    val enc = graft.Materialize.checkpoint(
-      assignCellsTopA(exP, coarse, spill)
-        .join(pqCodesOfUnordered(exP, cent, m, dim), "vec_id")
-        .join(unitArrays(exP), "vec_id"))
+    val enc = graft.Materialize.checkpoint(encodeRows(
+      explodeVecsUnit(encodeEmb).repartition(col("vec_id")), coarse, cent,
+      spill, variant, m, dim))
     store.save(Map(
       "coarse" -> coarse,
       "cells" -> enc.select("vec_id", "cid"),
@@ -863,6 +897,52 @@ object Similarity {
       "vectors" -> enc.select("vec_id", "ux").dropDuplicates("vec_id"),
       "dials" -> dials) ++ extraParts,
       partitioned = Map("codes" -> Seq("cid")))
+  }
+
+  /** Residual-vector frame of `ex` under `coarse`/`cells`: (vec_id, i,
+    * x = x − c_assigned(i)) — the domain residual PQ trains and encodes
+    * in. One broadcast join; pointwise per vector under frozen
+    * centroids, which is what makes residual incremental == batch. */
+  private def residualRows(ex: DataFrame, cells: DataFrame,
+      coarse: DataFrame): DataFrame =
+    ex.join(cells, "vec_id")
+      .join(broadcast(coarse), Seq("cid", "i"))
+      .select(col("vec_id"), col("i"), (col("x") - col("c")).as("x"))
+
+  /** The one encode body (build and increment alike): assign each unit
+    * vector of `ex` to its `spill` nearest cells, PQ-encode it in the
+    * variant's domain, attach the rerank payload → (vec_id, cid,
+    * c0..c{m-1}, ux). `ex` arrives hash-partitioned by vec_id, so all
+    * three legs aggregate over the SHARED shuffle output (ReuseExchange
+    * dedupes the identical subtree) and the vec_id equi-joins need no
+    * further exchange (guide §2.4). */
+  private def encodeRows(ex: DataFrame, coarse: DataFrame,
+      codebooks: DataFrame, spill: Int, variant: String, m: Int,
+      dim: Int): DataFrame = {
+    val cells = assignCellsTopA(ex, coarse, spill)
+    val domain = if (cellKeyed(variant)) residualRows(ex, cells, coarse)
+      else ex
+    cells.join(pqCodesOfUnordered(domain, codebooks, m, dim), "vec_id")
+      .join(unitArrays(ex), "vec_id") // rerank payload rides the codes
+  }
+
+  /** Assign + PQ-encode vectors against a PERSISTED index's FROZEN
+    * quantizers — the per-increment step of incremental maintenance
+    * (no training jobs: centroids and codebooks broadcast from the
+    * store). `_CURRENT` is read once: quantizers, spill and variant all
+    * come from that version, so a rebuild flipping the pointer
+    * mid-call cannot pair one version's centroids with the next one's
+    * codebooks. Returns (vec_id, cid, c0..c{m-1}, ux) — the coded-row
+    * schema the search path consumes. Encoding is pointwise per vector,
+    * so encoding increments separately is EXACTLY encoding their union:
+    * the property that makes incremental == batch (StreamingAnnSpec). */
+  def encodeWithIndex(store: graft.store.ModelStore, emb: DataFrame,
+      m: Int = 4, dim: Int = 64): DataFrame = {
+    val v = pinnedVersion(store)
+    val (spill, variant) = dialsAt(store, v)
+    encodeRows(explodeVecsUnit(emb).repartition(col("vec_id")),
+      store.loadAt(v, "coarse"), store.loadAt(v, "codebooks"), spill,
+      variant, m, dim)
   }
 
   /** The candidate coded frame (vec_id, cid, c0..c{m-1}) of a persisted
@@ -882,102 +962,118 @@ object Similarity {
     else ld("cells").join(codes, "vec_id")
   }
 
+  /** What every serve body reads: an index's coarse centroids, its
+    * candidate coded frame (vec_id, cid, c0..c{m-1}), its full-precision
+    * frame (vec_id, ux), its codebooks and its encoding variant — from
+    * one persisted version ([[pinnedFrames]]) or from the streaming
+    * base ∪ increments union ([[graft.streaming.StreamingAnn]]), so the
+    * two cannot diverge on search semantics. `vectors` is kept OUT of
+    * `coded` so the ADC pass never carries or joins the 8·dim-byte
+    * payload; a `coded` frame that still carries ux (the streaming
+    * dedup union, where codes and payload must win TOGETHER per vec_id)
+    * is accepted — the column is dropped before scoring. */
+  private[graft] case class IndexFrames(coarse: DataFrame, coded: DataFrame,
+      vectors: DataFrame, codebooks: DataFrame, variant: String) {
+    /** Pre-filtering: `pred` lands on the candidates before ADC, so a
+      * selective filter cannot starve the top-k. */
+    def filter(pred: Column): IndexFrames = copy(coded = coded.filter(pred))
+  }
+
+  private def pinnedVersion(store: graft.store.ModelStore): Long =
+    store.currentVersion.getOrElse(throw new IllegalStateException(
+      s"model store ${store.rootPath} is empty"))
+
+  /** The CURRENT version's [[IndexFrames]], `_CURRENT` read ONCE: every
+    * part and the variant come from that version (the ADVICE r10
+    * [[graft.streaming.StreamingAnn.searchAuto]] rule — a per-part
+    * `load` re-reads the pointer, so a rebuild landing mid-query could
+    * pair one version's coarse table with the next version's codes). */
+  private[graft] def pinnedFrames(store: graft.store.ModelStore)
+      : IndexFrames = {
+    val v = pinnedVersion(store)
+    def ld(part: String) = store.loadAt(v, part)
+    IndexFrames(ld("coarse"), codedFrame(ld), ld("vectors"),
+      ld("codebooks"), indexVariantAt(store, v))
+  }
+
   /** Serve a top-k query from a persisted index — NO training jobs: the
     * only distributed work is the candidate slice + m broadcast lookup
     * joins over the stored codes + the shortlist rerank. Bit-identical
-    * to [[ivfPqSearch]] over the corpus the index was built from
+    * to [[ivfPqSearch]] over the corpus a raw index was built from
     * (parquet round-trips doubles exactly; probe + ADC + rerank share
-    * the in-query definitions). */
+    * the in-query definitions); a residual index serves through the
+    * same body with per-cell tables. */
   def ivfPqSearchPersisted(store: graft.store.ModelStore,
       qVec: Map[Int, Double], qId: Long = -1L, topK: Int = 10,
       nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      rerankK: Int = 100): DataFrame = {
-    requireVariant(store, "raw", "ivfPqSearchPersisted")
-    ivfPqSearchOver(store.load("coarse"), codedFrame(store.load),
-      store.load("vectors"),
-      store.load("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
+      rerankK: Int = 100): DataFrame =
+    ivfPqSearchOver(pinnedFrames(store), qVec, qId, topK, nprobe, m, dim,
+      rerankK)
+
+  /** Probe + ADC for one query over `ix`: the `nprobe` nearest cells in
+    * probe order, and those cells' candidates (the query's own id
+    * excluded) with their 9-dec-rounded `adc` — the one scorer the
+    * top-k, range and sweep shapes share, so they cannot diverge on
+    * ADC arithmetic. The variant's single serve-side effect is here: a
+    * residual index's tables are per probed cell (q − c_cell). */
+  private def probeScored(ix: IndexFrames, qVec: Map[Int, Double],
+      qId: Long, nprobe: Int, m: Int, dim: Int): (Seq[Int], DataFrame) = {
+    val keyed = cellKeyed(ix.variant)
+    val coarseRows = ix.coarse.collect()
+    val probed = nearestCells(coarseRows, qVec, nprobe)
+    val cand = ix.coded.drop("ux")
+      .filter(col("cid").isin(probed: _*) && col("vec_id") =!= qId)
+    val cells = if (!keyed) None else Some(probed.map { pc =>
+      pc -> coarseRows.filter(_.getAs[Int]("cid") == pc)
+        .sortBy(_.getAs[Int]("i")).map(_.getAs[Double]("c"))
+    })
+    (probed, adcScored(cand, ix.codebooks, qVec, m, dim / m, cells))
   }
 
-  /** Search over an EXPLICIT coded frame (vec_id, cid, c0..c{m-1}) plus
-    * a SEPARATE full-precision frame (vec_id, ux) — the one
-    * probe+ADC+rerank body shared by the persisted serving path and the
-    * streaming-incremental union ([[graft.streaming.StreamingAnn]]), so
-    * base and incremented indexes cannot diverge on search semantics.
-    * `vectors` is kept OUT of `coded` so the ADC pass never carries or
-    * joins the 8·dim-byte payload — the rerank joins the ≤
-    * nprobe·rerankK shortlist ids into the vectors table directly
-    * (broadcast of the tiny shortlist: no corpus-wide shuffle of ux).
-    * A `coded` frame that still carries a ux column (the streaming
-    * dedup union, where codes and payload must win TOGETHER per
-    * vec_id) is accepted — the column is dropped before scoring.
-    *
-    * Two stages, both required for a cosine-correct result (VERDICT r8
-    * #2): (1) ADC shortlist — score the probed cells' codes against
-    * the per-query distance table and keep the top `rerankK` PER CELL
-    * (cell-partitioned window: bounded sort state, and per-cell lists
-    * make the candidate set NESTED in nprobe, which is what makes
-    * recall provably monotone in nprobe); (2) exact rerank — join the
-    * ≤ nprobe·rerankK shortlist ids back to the stored unit vectors
-    * and score each with a fixed-order zip_with/aggregate fold against
-    * the query literal (unit dot ≡ cosine of the raw vectors; the
-    * interpreted lambda touches only shortlist rows). The output
-    * column is `cos_sim`, directly comparable to [[cosineTopK]]'s. At
-    * 100 TB the ADC pass reads m bytes per candidate (ux is pruned
-    * from that scan) and the rerank reads full vectors for the
-    * shortlist only — the memory-bandwidth split production ANN
-    * engines (FAISS IVFPQ+refine) ship. */
-  private[graft] def ivfPqSearchOver(coarse: DataFrame, coded: DataFrame,
-      vectors: DataFrame, codebooks: DataFrame, qVec: Map[Int, Double],
-      qId: Long, topK: Int = 10, nprobe: Int = 2, m: Int = 4,
-      dim: Int = 64, rerankK: Int = 100): DataFrame = {
-    val probed = nearestCells(coarse.collect(), qVec, nprobe)
-    val cand = coded.drop("ux")
-      .filter(col("cid").isin(probed: _*) && col("vec_id") =!= qId)
+  /** Exact rerank: the shortlist (vec_id plus any carried columns)
+    * joined to the stored unit vectors, each scored with a fixed-order
+    * zip_with/aggregate fold against the query literal (unit dot ≡
+    * cosine of the raw vectors; the interpreted lambda touches only
+    * shortlist rows) → `cos_sim`, directly comparable to
+    * [[cosineTopK]]'s. */
+  private def reranked(vectors: DataFrame, short: DataFrame,
+      qVec: Map[Int, Double], dim: Int): DataFrame = {
+    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
+    vectors.select(col("vec_id"), col("ux")).join(short, "vec_id")
+      .select(short.columns.toSeq.map(col) :+
+        round(aggregate(zip_with(col("ux"), typedlit(qArr),
+          (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
+          .as("cos_sim"): _*)
+  }
+
+  /** The one top-k serve body, shared by the persisted path, the
+    * filtered forms and the streaming-incremental union. Two stages,
+    * both required for a cosine-correct result (VERDICT r8 #2): (1) ADC
+    * shortlist — score the probed cells' codes ([[probeScored]]) and
+    * keep the top `rerankK` PER CELL (cell-partitioned window: bounded
+    * sort state, and per-cell lists make the candidate set NESTED in
+    * nprobe, which is what makes recall provably monotone in nprobe);
+    * (2) exact rerank of the ≤ nprobe·rerankK shortlist ids against the
+    * stored unit vectors (broadcast of the tiny shortlist: no
+    * corpus-wide shuffle of ux). At 100 TB the ADC pass reads m bytes
+    * per candidate and the rerank reads full vectors for the shortlist
+    * only — the memory-bandwidth split production ANN engines (FAISS
+    * IVFPQ+refine) ship. */
+  private[graft] def ivfPqSearchOver(ix: IndexFrames,
+      qVec: Map[Int, Double], qId: Long, topK: Int = 10, nprobe: Int = 2,
+      m: Int = 4, dim: Int = 64, rerankK: Int = 100): DataFrame = {
+    val (_, scored) = probeScored(ix, qVec, qId, nprobe, m, dim)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("cid").orderBy(asc("adc"), asc("vec_id"))
     // distinct: a spilled index ([[assignCellsTopA]]) can shortlist the
     // same vec_id from two probed cells; the rerank must score it once
     // (shortlist rows are ≤ nprobe·rerankK — the distinct is noise)
-    val short = adcScored(cand, codebooks, qVec, m, dim / m)
-      .withColumn("__rn", row_number().over(w))
+    val short = scored.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= rerankK)
       .select("vec_id").distinct()
-    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
-    vectors.select(col("vec_id"), col("ux")).join(broadcast(short), "vec_id")
-      .select(col("vec_id"),
-        round(aggregate(zip_with(col("ux"), typedlit(qArr),
-          (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
-          .as("cos_sim"))
+    reranked(ix.vectors, broadcast(short), qVec, dim)
       .orderBy(desc("cos_sim"), asc("vec_id"))
       .limit(topK)
-  }
-
-  /** Assign + PQ-encode vectors against a PERSISTED index's FROZEN
-    * quantizers — the per-increment step of incremental maintenance
-    * (no training jobs: centroids and codebooks broadcast from the
-    * store). Returns (vec_id, cid, c0..c{m-1}, ux) — the coded-row
-    * schema the search path consumes (ux = the unit-domain vector, the
-    * exact-rerank payload). Encoding is pointwise per vector, so
-    * encoding increments separately is EXACTLY encoding their union:
-    * the property that makes incremental == batch (StreamingAnnSpec). */
-  def encodeWithIndex(store: graft.store.ModelStore, emb: DataFrame,
-      m: Int = 4, dim: Int = 64): DataFrame = {
-    requireVariant(store, "raw", "encodeWithIndex")
-    // ONE exchange feeds all three per-vector legs (assignment, PQ
-    // codes, rerank payload): the exploded unit rows hash-partition by
-    // vec_id once, every leg's groupBy clusters by vec_id (or a
-    // superset), so the legs aggregate map-side over the SHARED shuffle
-    // output (ReuseExchange dedupes the identical subtree) and the
-    // final vec_id equi-joins need no further exchange. The previous
-    // shape re-scanned + re-exploded the input per leg and shuffled
-    // each aggregation separately (guide §2.4: operations keyed the
-    // same way share one exchange). Values are bit-identical — same
-    // groups, same terms, only the routing changed.
-    val ex = explodeVecsUnit(emb).repartition(col("vec_id"))
-    assignCellsTopA(ex, store.load("coarse"), indexSpill(store))
-      .join(pqCodesOfUnordered(ex, store.load("codebooks"), m, dim),
-        "vec_id")
-      .join(unitArrays(ex), "vec_id") // rerank payload rides the codes
   }
 
   // per-(store, version) dials cache: a saved version is immutable, so
@@ -1030,17 +1126,17 @@ object Similarity {
   def indexVariantAt(store: graft.store.ModelStore, v: Long): String =
     dialsAt(store, v)._2
 
-  /** Refuse to serve/extend an index through a path built for the
-    * other encoding variant: raw ADC tables scored against residual
-    * codes (or vice versa) return silently wrong neighbors — the
-    * worst failure mode an index can have. One tiny driver read. */
-  private def requireVariant(store: graft.store.ModelStore,
-      expected: String, path: String): Unit = {
-    val v = indexVariant(store)
-    require(v == expected,
-      s"$path serves '$expected'-coded indexes but the store is " +
-        s"'$v'-coded — scoring would be silently wrong; use the " +
-        "matching search/encode path")
+  /** The encoding variant's one consequence, validated: true when PQ
+    * codes x − c_cell ("residual": ADC tables keyed by (cell, subspace),
+    * single-assigned), false when it codes x ("raw": tables keyed by
+    * subspace). Any other value is refused — a build, encode or serve
+    * must never fall back to raw on a misspelled dial, since raw tables
+    * scored against residual codes return silently wrong neighbors. */
+  private[graft] def cellKeyed(variant: String): Boolean = variant match {
+    case "raw" => false
+    case "residual" => true
+    case other => throw new IllegalArgumentException(
+      s"unknown IVF-PQ encoding variant '$other' (expected raw or residual)")
   }
 
   /** Query-vector extraction from an embeddings frame (vec_id,
@@ -1062,7 +1158,8 @@ object Similarity {
     *     cell) distances → per-query top-nprobe cells (window over
     *     nlist rows per query);
     *  2. distance tables: queries ⋈ broadcast codebooks → (qid, s,
-    *     cid, dq) — Q·m·k rows, broadcast to the scoring join;
+    *     code, dq) — Q·m·k rows (Q·nprobe·m·k for a residual index),
+    *     broadcast to the scoring join;
     *  3. ADC: candidates = coded rows equi-joined to their probed
     *     queries on the CELL key (each query reads nprobe/nlist of
     *     the codes), m broadcast lookups, fixed-order add;
@@ -1087,20 +1184,18 @@ object Similarity {
     *
     * `broadcastQueries` (default true) broadcasts the per-query
     * structures (unit query vectors: Q·dim doubles; distance-table
-    * slices: Q·k rows per subspace) — right for serving batches up to
-    * ~10⁵ queries. Beyond that the per-query structures outgrow the
-    * broadcast limit: pass false and the same plan runs them as
-    * shuffle equi-joins (qid is the join key on every one), trading
-    * per-executor copies for one shuffle of the candidate set. */
+    * slices: Q·k rows per subspace, ×nprobe for a residual index) —
+    * right for serving batches up to ~10⁵ queries (~10⁴ residual).
+    * Beyond that the per-query structures outgrow the broadcast limit:
+    * pass false and the same plan runs them as shuffle equi-joins (qid
+    * is the join key on every one), trading per-executor copies for one
+    * shuffle of the candidate set. */
   def ivfPqKnnJoin(store: graft.store.ModelStore, queries: DataFrame,
       topK: Int = 5, nprobe: Int = 2, m: Int = 4, dim: Int = 64,
       rerankK: Int = 50, excludeSelf: Boolean = true,
-      broadcastQueries: Boolean = true): DataFrame = {
-    requireVariant(store, "raw", "ivfPqKnnJoin")
-    ivfPqKnnJoinOver(store.load("coarse"), codedFrame(store.load),
-      store.load("vectors"), store.load("codebooks"), queries,
-      topK, nprobe, m, dim, rerankK, excludeSelf, broadcastQueries)
-  }
+      broadcastQueries: Boolean = true): DataFrame =
+    ivfPqKnnJoinOver(pinnedFrames(store), queries, topK, nprobe, m, dim,
+      rerankK, excludeSelf, broadcastQueries)
 
   /** Predicate-FILTERED batched k-NN — [[ivfPqSearchFiltered]]'s
     * serving-tier twin: one relational plan answering every query in
@@ -1114,56 +1209,66 @@ object Similarity {
       queries: DataFrame, pred: Column, topK: Int = 5, nprobe: Int = 2,
       m: Int = 4, dim: Int = 64, rerankK: Int = 50,
       excludeSelf: Boolean = true,
-      broadcastQueries: Boolean = true): DataFrame = {
-    requireVariant(store, "raw", "ivfPqKnnJoinFiltered")
-    ivfPqKnnJoinOver(store.load("coarse"),
-      codedFrame(store.load).filter(pred),
-      store.load("vectors"), store.load("codebooks"), queries,
-      topK, nprobe, m, dim, rerankK, excludeSelf, broadcastQueries)
-  }
+      broadcastQueries: Boolean = true): DataFrame =
+    ivfPqKnnJoinOver(pinnedFrames(store).filter(pred), queries, topK,
+      nprobe, m, dim, rerankK, excludeSelf, broadcastQueries)
+
+  /** The `vec_id % 3 = 1` allowed set the filtered driver-contract rows
+    * serve over. */
+  private[graft] def allowedThirds: Column = pmod(col("vec_id"), lit(3)) === 1
 
   /** Driver-contract form of [[ivfPqKnnJoinFiltered]]
     * (`q_ivfpq_batch_filtered`): the first-8 query batch served over
-    * the `vec_id % 3 = 1` allowed set from the process-shared index. */
+    * the [[allowedThirds]] set from the process-shared index. */
   def ivfPqKnnJoinFilteredQuery(spark: SparkSession,
       dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings")
     ivfPqKnnJoinFiltered(sharedIvfPqIndex(spark, dir),
-      emb.filter(col("vec_id") < 8),
-      pmod(col("vec_id"), lit(3)) === 1)
+      emb.filter(col("vec_id") < 8), allowedThirds)
   }
 
-  /** [[ivfPqKnnJoin]] over EXPLICIT frames — the batched raw serve the
-    * streaming-incremental union dispatches to
-    * ([[graft.streaming.StreamingAnn.knnJoinIncremental]]), mirroring
-    * the single-query [[ivfPqSearchOver]] split so base and incremented
-    * indexes cannot diverge on batch-serving semantics either. A
-    * `coded` frame still carrying the ux payload is accepted (dropped
-    * before scoring). */
-  private[graft] def ivfPqKnnJoinOver(coarse: DataFrame,
-      coded0: DataFrame, vectors: DataFrame, codebooks: DataFrame,
+  /** [[ivfPqKnnJoin]] over EXPLICIT frames — the one batched serve body,
+    * which the streaming-incremental union dispatches to as well
+    * ([[graft.streaming.StreamingAnn.knnJoinIncremental]]), so base and
+    * incremented indexes cannot diverge on batch-serving semantics. */
+  private[graft] def ivfPqKnnJoinOver(ix: IndexFrames,
       queries: DataFrame, topK: Int = 5, nprobe: Int = 2, m: Int = 4,
       dim: Int = 64, rerankK: Int = 50, excludeSelf: Boolean = true,
       broadcastQueries: Boolean = true): DataFrame = {
-    val coded = coded0.drop("ux")
+    val keyed = cellKeyed(ix.variant)
+    val coded = ix.coded.drop("ux")
     val sub = dim / m
     val bq: DataFrame => DataFrame =
       if (broadcastQueries) broadcast(_) else identity
     val exQ = explodeVecsUnit(queries).localCheckpoint(true)
-    val qcd = exQ.join(broadcast(coarse), Seq("i"))
+    val qcd = exQ.join(broadcast(ix.coarse), Seq("i"))
       .groupBy(col("vec_id").as("qid"), col("cid"))
       .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d"))
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(asc("d"), asc("cid"))
-    val probes = qcd.withColumn("d", round(col("d"), 9))
+    val probes0 = qcd.withColumn("d", round(col("d"), 9))
       .withColumn("__rn", row_number().over(wp))
       .filter(col("__rn") <= nprobe).select("qid", "cid")
-    val dts = exQ
-      .select(col("vec_id").as("qid"),
-        (col("i") / sub).cast("int").as("s"),
-        (col("i") % sub).as("i"), col("x"))
-      .join(broadcast(codebooks), Seq("s", "i"))
-      .groupBy("qid", "s", "cid")
+    val qx = exQ.select(col("vec_id").as("qid"), col("i"), col("x"))
+    // the query side of the distance tables: its own components keyed
+    // by qid (raw), or its residual x − c_cell against each probed cell
+    // keyed by (qid, cid) (residual — the probe list then feeds both
+    // the tables and the candidate join, so it is materialized once)
+    val (probes, keys, qside) =
+      if (!keyed) (probes0, Seq("qid"), qx)
+      else {
+        val p = probes0.localCheckpoint(true)
+        (p, Seq("qid", "cid"), qx.join(bq(p), Seq("qid"))
+          .join(broadcast(ix.coarse), Seq("cid", "i"))
+          .select(col("qid"), col("cid"), col("i"),
+            (col("x") - col("c")).as("x")))
+      }
+    val dts = qside
+      .select(keys.map(col) ++ Seq((col("i") / sub).cast("int").as("s"),
+        (col("i") % sub).as("i"), col("x")): _*)
+      .join(broadcast(ix.codebooks.withColumnRenamed("cid", "code")),
+        Seq("s", "i"))
+      .groupBy((keys ++ Seq("s", "code")).map(col): _*)
       .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dq"))
       .localCheckpoint(true) // m scoring joins read it
     // the probe list is Q·nprobe ids but arrives through a window, so
@@ -1178,8 +1283,8 @@ object Similarity {
       if (excludeSelf) cand0.filter(col("vec_id") =!= col("qid")) else cand0
     val scored = (0 until m).foldLeft(cand) { (df, s) =>
       df.join(bq(dts.filter(col("s") === s)
-        .select(col("qid"), col("cid").as(s"c$s"), col("dq").as(s"d$s"))),
-        Seq("qid", s"c$s"))
+        .select(keys.map(col) ++ Seq(col("code").as(s"c$s"),
+          col("dq").as(s"d$s")): _*)), keys :+ s"c$s")
     }.withColumn("adc",
       round((0 until m).map(s => col(s"d$s")).reduce(_ + _), 9))
     val ws = org.apache.spark.sql.expressions.Window
@@ -1192,7 +1297,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("ux").as("qx"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(desc("cos_sim"), asc("vec_id"))
-    short.join(vectors.select(col("vec_id"), col("ux")), "vec_id")
+    short.join(ix.vectors.select(col("vec_id"), col("ux")), "vec_id")
       .join(bq(qvecs), "qid")
       .select(col("qid"), col("vec_id"),
         round(aggregate(zip_with(col("ux"), col("qx"), (a, b) => a * b),
@@ -1202,30 +1307,33 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  /** The process-shared trained IVF-PQ index over `dir`'s embeddings
-    * table at the default dials: built ONCE per (corpus fingerprint,
-    * dials) and served by every serve-only query after that
-    * ([[graft.store.ModelStore.shared]] — the ArtifactCache discipline
-    * applied to models). The build cost stays a measured benchmark row
-    * via `q_ivfpq_persisted`, which keeps its own scratch build by
-    * design of the persisted==inline gate. Training is deterministic,
-    * so a serve-from-cache result is bit-identical to a
+  /** The process-shared trained IVF-PQ index of `variant` over `dir`'s
+    * embeddings table at the default dials: built ONCE per (corpus
+    * fingerprint, variant, dials) and served by every serve-only query
+    * after that ([[graft.store.ModelStore.shared]] — the ArtifactCache
+    * discipline applied to models). The build cost stays a measured
+    * benchmark row via `q_ivfpq_persisted`, which keeps its own scratch
+    * build by design of the persisted==inline gate. Training is
+    * deterministic, so a serve-from-cache result is bit-identical to a
     * train-then-serve result — the oracle cannot observe which ran. */
-  private def sharedIvfPqIndex(spark: SparkSession,
-      dir: String): graft.store.ModelStore =
-    graft.store.ModelStore.shared(spark, Seq("ivfpq",
+  private def sharedIvfPqIndex(spark: SparkSession, dir: String,
+      variant: String = "raw"): graft.store.ModelStore =
+    graft.store.ModelStore.shared(spark, Seq(s"ivfpq-$variant",
       graft.store.ArtifactCache.tableFingerprint(dir, "embeddings"),
       "kCells=4", "m=4", "k=8", "iters=2", "dim=64")) { store =>
-      saveIvfPqIndex(t(spark, dir, "embeddings"), store); ()
+      saveIvfPqIndex(t(spark, dir, "embeddings"), store,
+        variant = variant); ()
     }
 
-  /** Driver-contract form of [[ivfPqKnnJoin]]: serve the first 8
-    * vectors as the query batch ([[knnJoin]]'s query-set convention)
-    * from the process-shared index — zero training jobs when any
-    * IVF-PQ serve-only query already built it. */
-  def ivfPqKnnJoinQuery(spark: SparkSession, dir: String): DataFrame = {
+  /** Driver-contract form of [[ivfPqKnnJoin]] (`q_ivfpq_batch`,
+    * `q_ivfpq_batch_residual`): serve the first 8 vectors as the query
+    * batch ([[knnJoin]]'s query-set convention) from the process-shared
+    * index of `variant` — zero training jobs when any serve-only query
+    * already built it. */
+  def ivfPqKnnJoinQuery(spark: SparkSession, dir: String,
+      variant: String = "raw"): DataFrame = {
     val emb = t(spark, dir, "embeddings")
-    ivfPqKnnJoin(sharedIvfPqIndex(spark, dir),
+    ivfPqKnnJoin(sharedIvfPqIndex(spark, dir, variant),
       emb.filter(col("vec_id") < 8))
   }
 
@@ -1244,168 +1352,6 @@ object Similarity {
       store.cloneCurrentFrom(sharedIvfPqIndex(spark, dir))
       ivfPqSearchPersisted(store, queryVecOf(emb, 0L), qId = 0L)
     }
-  }
-
-  // ---- RESIDUAL IVF-PQ (the actual FAISS IVFPQ semantics): PQ is
-  // trained and encoded on r = x − c_cell(x), not on x itself. The
-  // residual distribution is far tighter than the raw one (the coarse
-  // quantizer has already explained the cell-level structure), so the
-  // same m·log₂k bits quantize it with much less error — measured on
-  // this corpus: ADC-shortlist recall@10 at the fixed dials rises from
-  // 0.7 to 0.9 at EVERY nprobe, at identical storage cost. The price
-  // is a per-CELL ADC distance table (the query residual differs per
-  // probed cell): nprobe·m·k driver-computed entries per query instead
-  // of m·k — still trivially bounded. Kept as a parallel variant: the
-  // raw-PQ rows stay pinned, increments/streaming stay raw-coded. ----
-
-  /** Residual-encoded IVF-PQ index: same artifact names and layout as
-    * [[saveIvfPqIndex]], but the codebooks train on (and the codes
-    * encode) each vector's residual against its assigned coarse
-    * centroid. Single-assignment (residual-of-THE-cell is what ADC
-    * corrects; a spilled replica would need per-replica residual codes
-    * — the cells/codes join already supports that shape if ever
-    * wanted). */
-  def saveIvfPqResidualIndex(emb: DataFrame,
-      store: graft.store.ModelStore, kCells: Int = 4, m: Int = 4,
-      k: Int = 8, iters: Int = 2, dim: Int = 64): Long =
-    saveIvfPqResidualIndexTrainedOn(emb, emb, store, kCells, m, k,
-      iters, dim)
-
-  /** Residual-vector frame of `ex` under `coarse`/`cells`: (vec_id, i,
-    * x = x − c_assigned(i)) — the domain residual PQ trains and encodes
-    * in. One broadcast join; pointwise per vector under frozen
-    * centroids, which is what makes residual incremental == batch. */
-  private def residualRows(ex: DataFrame, cells: DataFrame,
-      coarse: DataFrame): DataFrame =
-    ex.join(cells, "vec_id")
-      .join(broadcast(coarse), Seq("cid", "i"))
-      .select(col("vec_id"), col("i"), (col("x") - col("c")).as("x"))
-
-  /** Split-aware residual build ([[saveIvfPqIndexTrainedOn]]'s twin):
-    * coarse quantizer and residual codebooks train on `trainEmb` only,
-    * the index encodes ALL of `encodeEmb` — the hook the drift-monitored
-    * / incrementally-maintained residual index needs (a held-out slice's
-    * out-of-sample residuals calibrate the gate, and the streaming loop
-    * can rebuild a residual store without changing its variant). */
-  def saveIvfPqResidualIndexTrainedOn(trainEmb: DataFrame,
-      encodeEmb: DataFrame, store: graft.store.ModelStore,
-      kCells: Int = 4, m: Int = 4, k: Int = 8, iters: Int = 2,
-      dim: Int = 64,
-      extraParts: Map[String, DataFrame] = Map.empty): Long = {
-    val exT = graft.Materialize.checkpoint(explodeVecsUnit(trainEmb))
-    val coarse = lloydCentroids(exT, kCells, iters)
-    val rxT = graft.Materialize.checkpoint(
-      residualRows(exT, assignCells(exT, coarse), coarse))
-    val cent = pqCodebooksFused(rxT, m, k, iters, dim)
-    val ex = graft.Materialize.checkpoint(explodeVecsUnit(encodeEmb))
-    // the [[saveIvfPqIndexTrainedOn]] shared-encode shape: one
-    // materialized encode frame, parts are projections of it
-    val exP = ex.repartition(col("vec_id"))
-    val cells = assignCells(exP, coarse)
-    val rx = residualRows(exP, cells, coarse)
-    val dials = trainEmb.sparkSession.range(1).select(
-      lit(kCells).as("nlist"), lit(1).as("spill"), lit(m).as("m"),
-      lit(k).as("k"), lit(iters).as("iters"), lit(dim).as("dim"),
-      lit("residual").as("variant"))
-    val enc = graft.Materialize.checkpoint(
-      cells.join(pqCodesOfUnordered(rx, cent, m, dim), "vec_id")
-        .join(unitArrays(exP), "vec_id"))
-    store.save(Map(
-      "coarse" -> coarse,
-      "cells" -> enc.select("vec_id", "cid"),
-      "codebooks" -> cent,
-      "codes" -> enc.drop("ux"),
-      "vectors" -> enc.select("vec_id", "ux").dropDuplicates("vec_id"),
-      "dials" -> dials) ++ extraParts,
-      partitioned = Map("codes" -> Seq("cid")))
-  }
-
-  /** Assign + residual-PQ-encode vectors against a persisted RESIDUAL
-    * index's frozen quantizers — [[encodeWithIndex]]'s residual twin,
-    * the per-increment step that lets [[graft.streaming.StreamingAnn]]
-    * maintain a residual store. Returns the same coded-row schema
-    * (vec_id, cid, c0..c{m-1}, ux). Assignment is single-cell (the
-    * residual-of-THE-cell is what ADC corrects) and both assignment and
-    * encoding are pointwise per vector under the frozen coarse table and
-    * codebooks, so encoding increments separately IS encoding their
-    * union — residual incremental == residual batch re-encode
-    * (StreamingAnnSpec pins it). */
-  def encodeResidualWithIndex(store: graft.store.ModelStore,
-      emb: DataFrame, m: Int = 4, dim: Int = 64): DataFrame = {
-    requireVariant(store, "residual", "encodeResidualWithIndex")
-    // the [[encodeWithIndex]] shared-exchange shape (guide §2.4): one
-    // vec_id hash partition of the exploded rows feeds assignment,
-    // residual codes, and the rerank payload
-    val ex = explodeVecsUnit(emb).repartition(col("vec_id"))
-    val coarse = store.load("coarse")
-    val cells = assignCells(ex, coarse)
-    cells
-      .join(pqCodesOfUnordered(residualRows(ex, cells, coarse),
-        store.load("codebooks"), m, dim), "vec_id")
-      .join(unitArrays(ex), "vec_id")
-  }
-
-  /** Variant-dispatched incremental encode: read the store's own
-    * `variant` dial and run the matching encoder — the one entry point
-    * ingest loops should call, so a residual store is maintained with
-    * residual codes and a raw store with raw codes, and the
-    * cross-variant mistake ([[requireVariant]]) cannot be reached. */
-  def encodeForIndex(store: graft.store.ModelStore, emb: DataFrame,
-      m: Int = 4, dim: Int = 64): DataFrame =
-    indexVariant(store) match {
-      case "residual" => encodeResidualWithIndex(store, emb, m, dim)
-      case _ => encodeWithIndex(store, emb, m, dim)
-    }
-
-  /** Serve a top-k query from a residual-encoded index: probe as
-    * usual, then score every probed cell's codes against THAT cell's
-    * residual distance table (q − c_cell vs the residual codebooks) in
-    * ONE scan of the coded table — the per-(cell, subspace, code)
-    * tables for all probed cells are computed on the driver
-    * (nprobe·m·k entries) and broadcast-joined on (cid, code), exactly
-    * the SQL oracle's rdt shape, so the candidate pass reads the codes
-    * once however many cells are probed (an nprobe-legged union would
-    * re-scan the table per cell at corpus scale). Per-cell shortlists
-    * stay nested in nprobe (monotone recall); exact unit-dot rerank of
-    * the distinct shortlist. */
-  def ivfPqSearchResidualPersisted(store: graft.store.ModelStore,
-      qVec: Map[Int, Double], qId: Long = -1L, topK: Int = 10,
-      nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      rerankK: Int = 100): DataFrame = {
-    requireVariant(store, "residual", "ivfPqSearchResidualPersisted")
-    ivfPqSearchResidualOver(store.load("coarse"), codedFrame(store.load),
-      store.load("vectors"), store.load("codebooks"),
-      qVec, qId, topK, nprobe, m, dim, rerankK)
-  }
-
-  /** Residual serve over EXPLICIT frames — [[ivfPqSearchOver]]'s
-    * residual twin, the one probe+residual-ADC+rerank body shared by
-    * the persisted path and the streaming-incremental union
-    * ([[graft.streaming.StreamingAnn.searchIncremental]] dispatches
-    * here when the pinned version's variant is "residual"), so base and
-    * incremented residual indexes cannot diverge on search semantics. A
-    * `coded` frame still carrying the ux payload (the streaming dedup
-    * union) is accepted — dropped before scoring, same as the raw body. */
-  private[graft] def ivfPqSearchResidualOver(coarse: DataFrame,
-      coded: DataFrame, vectors: DataFrame, codebooks: DataFrame,
-      qVec: Map[Int, Double], qId: Long, topK: Int = 10,
-      nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      rerankK: Int = 100): DataFrame = {
-    val scored = residualAdcScored(coarse, coded, codebooks, qVec, qId,
-      nprobe, m, dim)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cid").orderBy(asc("adc"), asc("vec_id"))
-    val short = scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= rerankK)
-      .select("vec_id").distinct()
-    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
-    vectors.select(col("vec_id"), col("ux")).join(broadcast(short), "vec_id")
-      .select(col("vec_id"),
-        round(aggregate(zip_with(col("ux"), typedlit(qArr),
-          (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(topK)
   }
 
   // ---- ONE-SCAN multi-nprobe sweep (optimization round 15): every
@@ -1427,18 +1373,10 @@ object Similarity {
     * cell shortlists the vector — `sweepTopK(rr, np, k)` then equals
     * the per-np serve's top-k exactly, for every np ≤ npMax.
     * Materialized eagerly: ≤ npMax·rerankK rows, read once per branch. */
-  private[graft] def sweepRerankedOver(coarse: DataFrame, coded: DataFrame,
-      vectors: DataFrame, codebooks: DataFrame, qVec: Map[Int, Double],
-      qId: Long, npMax: Int, m: Int, dim: Int, rerankK: Int,
-      variant: String): DataFrame = {
-    val probed = nearestCells(coarse.collect(), qVec, npMax)
-    val scored =
-      if (variant == "residual")
-        residualAdcScored(coarse, coded, codebooks, qVec, qId, npMax,
-          m, dim)
-      else adcScored(coded.drop("ux")
-          .filter(col("cid").isin(probed: _*) && col("vec_id") =!= qId),
-        codebooks, qVec, m, dim / m)
+  private[graft] def sweepRerankedOver(ix: IndexFrames,
+      qVec: Map[Int, Double], qId: Long, npMax: Int, m: Int, dim: Int,
+      rerankK: Int): DataFrame = {
+    val (probed, scored) = probeScored(ix, qVec, qId, npMax, m, dim)
     val pr = probed.zipWithIndex
       .foldLeft(lit(Int.MaxValue)) { case (acc, (cid, r)) =>
         when(col("cid") === cid, lit(r + 1)).otherwise(acc)
@@ -1449,14 +1387,8 @@ object Similarity {
       .filter(col("__rn") <= rerankK)
       .withColumn("__pr", pr)
       .groupBy("vec_id").agg(min("__pr").as("__pr"))
-    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
     graft.Materialize.checkpoint(
-      vectors.select(col("vec_id"), col("ux"))
-        .join(broadcast(short), "vec_id")
-        .select(col("vec_id"), col("__pr"),
-          round(aggregate(zip_with(col("ux"), typedlit(qArr),
-            (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
-            .as("cos_sim")))
+      reranked(ix.vectors, broadcast(short), qVec, dim))
   }
 
   /** One branch of the sweep: the np-probe serve's top-k vec_ids from
@@ -1467,206 +1399,32 @@ object Similarity {
       .orderBy(desc("cos_sim"), asc("vec_id")).limit(topK)
       .select("vec_id")
 
-  /** [[sweepRerankedOver]] from a persisted index (variant-dispatched);
-    * `pred` is the filtered-serve predicate over the coded frame. */
+  /** [[sweepRerankedOver]] from the current version of a persisted
+    * index; `pred` is the filtered-serve predicate over the coded frame. */
   private[graft] def sweepRerankedPersisted(store: graft.store.ModelStore,
       qVec: Map[Int, Double], qId: Long, npMax: Int,
       rerankK: Int = 100, pred: Option[Column] = None, m: Int = 4,
       dim: Int = 64): DataFrame = {
-    val coded0 = codedFrame(store.load)
-    val coded = pred.map(coded0.filter).getOrElse(coded0)
-    sweepRerankedOver(store.load("coarse"), coded, store.load("vectors"),
-      store.load("codebooks"), qVec, qId, npMax, m, dim, rerankK,
-      indexVariant(store))
+    val ix = pinnedFrames(store)
+    sweepRerankedOver(pred.map(ix.filter).getOrElse(ix), qVec, qId, npMax,
+      m, dim, rerankK)
   }
 
-  /** Probe + per-cell residual distance tables + ONE ADC scan — the
-    * shared residual candidate scorer: the probed cells' coded rows
-    * with their 9-dec-rounded `adc` column. Top-k windows it per cell
-    * ([[ivfPqSearchResidualOver]]); range search bounds it
-    * ([[ivfPqRangeSearchResidualOver]]) — one scorer, so the two serve
-    * shapes cannot diverge on residual arithmetic. The per-(probed
-    * cell, subspace, code) tables are driver-built (|probed|·m·k
-    * entries) and broadcast-joined on (cid, code) — the SQL oracle's
-    * rdt shape, reading the codes once however many cells are probed. */
-  private def residualAdcScored(coarse: DataFrame, coded: DataFrame,
-      codebooks: DataFrame, qVec: Map[Int, Double], qId: Long,
-      nprobe: Int, m: Int, dim: Int): DataFrame = {
-    val spark = coarse.sparkSession
-    val coarseRows = coarse.collect()
-    val probed = nearestCells(coarseRows, qVec, nprobe)
-    val centBy = coarseRows.groupBy(_.getAs[Int]("cid"))
-      .map { case (cid, rows) =>
-        cid -> rows.sortBy(_.getAs[Int]("i"))
-          .map(_.getAs[Double]("c")).toArray
-      }
-    val sub = dim / m
-    val bookRows = codebooks.collect()
-      .groupBy(r => (r.getAs[Int]("s"), r.getAs[Int]("cid"))).toSeq
-    val dtRows = probed.flatMap { pc =>
-      val cv = centBy(pc)
-      bookRows.map { case ((s, code), rows) =>
-        val d = rows.sortBy(_.getAs[Int]("i")).foldLeft(0.0) { (acc, r) =>
-          val i = r.getAs[Int]("i")
-          val diff = (qVec.getOrElse(s * sub + i, 0.0) - cv(s * sub + i)) -
-            r.getAs[Double]("c")
-          acc + diff * diff
-        }
-        (pc, s, code, d)
-      }
-    }
-    val cand = coded.drop("ux")
-      .filter(col("cid").isin(probed: _*) && col("vec_id") =!= qId)
-    import spark.implicits._
-    (0 until m).foldLeft(cand) { (df, s) =>
-      val dt = broadcast(dtRows.filter(_._2 == s)
-        .map { case (pc, _, code, d) => (pc, code, d) }
-        .toDF("cid", s"c$s", s"d$s"))
-      df.join(dt, Seq("cid", s"c$s"))
-    }.withColumn("adc",
-      round((0 until m).map(s => col(s"d$s")).reduce(_ + _), 9))
-  }
-
-  /** BATCHED residual k-NN: [[ivfPqKnnJoin]]'s residual twin — top-k
-    * for every query in `queries` from a persisted RESIDUAL index, the
-    * whole serving batch as ONE relational plan. The residual wrinkle
-    * is the distance table: the query residual differs per probed cell,
-    * so the lookup tables are per-(query, CELL, subspace, code) —
-    * Q·nprobe·m·k rows instead of the raw path's Q·m·k — built by
-    * restricting the query components to their probed cells (one keyed
-    * join) before the codebook join. Probe selection, per-(query, cell)
-    * shortlists, and the exact unit-dot rerank are the raw batch path's
-    * verbatim (probe distances round to 9 before ranking — grouped sums
-    * are not combine-order-pinned, the [[ivfPqKnnJoin]] contract), so
-    * batch == single-query ([[ivfPqSearchResidualPersisted]]) holds
-    * query by query, spec-pinned. Returns (qid, vec_id, cos_sim, rnk).
-    *
-    * `broadcastQueries` bounds as in the raw path; the per-(query,
-    * cell) tables are nprobe× larger, so the broadcast ceiling arrives
-    * nprobe× sooner — pass false beyond ~10⁴ queries and the same plan
-    * runs shuffle equi-joins on (qid, cid). */
-  def ivfPqKnnJoinResidual(store: graft.store.ModelStore,
-      queries: DataFrame, topK: Int = 5, nprobe: Int = 2, m: Int = 4,
-      dim: Int = 64, rerankK: Int = 50, excludeSelf: Boolean = true,
-      broadcastQueries: Boolean = true): DataFrame = {
-    requireVariant(store, "residual", "ivfPqKnnJoinResidual")
-    ivfPqKnnJoinResidualOver(store.load("coarse"), codedFrame(store.load),
-      store.load("vectors"), store.load("codebooks"), queries,
-      topK, nprobe, m, dim, rerankK, excludeSelf, broadcastQueries)
-  }
-
-  /** [[ivfPqKnnJoinResidual]] over EXPLICIT frames — the batched
-    * residual serve the streaming-incremental union dispatches to; the
-    * same split as [[ivfPqKnnJoinOver]]/[[ivfPqSearchResidualOver]]. */
-  private[graft] def ivfPqKnnJoinResidualOver(coarse: DataFrame,
-      coded0: DataFrame, vectors: DataFrame, codebooks: DataFrame,
-      queries: DataFrame, topK: Int = 5, nprobe: Int = 2, m: Int = 4,
-      dim: Int = 64, rerankK: Int = 50, excludeSelf: Boolean = true,
-      broadcastQueries: Boolean = true): DataFrame = {
-    val coded = coded0.drop("ux")
-    val sub = dim / m
-    val bq: DataFrame => DataFrame =
-      if (broadcastQueries) broadcast(_) else identity
-    val exQ = explodeVecsUnit(queries).localCheckpoint(true)
-    val qcd = exQ.join(broadcast(coarse), Seq("i"))
-      .groupBy(col("vec_id").as("qid"), col("cid"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(asc("d"), asc("cid"))
-    val probes = qcd.withColumn("d", round(col("d"), 9))
-      .withColumn("__rn", row_number().over(wp))
-      .filter(col("__rn") <= nprobe).select("qid", "cid")
-      .localCheckpoint(true) // residual tables AND candidate join read it
-    // per-(query, probed cell) residual components: rx = x − c_cell
-    val qr = exQ.select(col("vec_id").as("qid"), col("i"), col("x"))
-      .join(bq(probes), Seq("qid"))
-      .join(broadcast(coarse), Seq("cid", "i"))
-      .select(col("qid"), col("cid"), col("i"),
-        (col("x") - col("c")).as("rx"))
-    val dts = qr
-      .select(col("qid"), col("cid"),
-        (col("i") / sub).cast("int").as("s"),
-        (col("i") % sub).as("i"), col("rx"))
-      .join(broadcast(codebooks)
-        .withColumnRenamed("cid", "code"), Seq("s", "i"))
-      .groupBy("qid", "cid", "s", "code")
-      .agg(sum((col("rx") - col("c")) * (col("rx") - col("c"))).as("dq"))
-      .localCheckpoint(true) // m scoring joins read it
-    // explicit bq on the windowed probe list for the same reason as the
-    // raw path: without it the candidate join sort-merges the corpus
-    val cand0 = coded.join(bq(probes), Seq("cid"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("vec_id") =!= col("qid")) else cand0
-    val scored = (0 until m).foldLeft(cand) { (df, s) =>
-      df.join(bq(dts.filter(col("s") === s)
-        .select(col("qid"), col("cid"), col("code").as(s"c$s"),
-          col("dq").as(s"d$s"))),
-        Seq("qid", "cid", s"c$s"))
-    }.withColumn("adc",
-      round((0 until m).map(s => col(s"d$s")).reduce(_ + _), 9))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid", "cid").orderBy(asc("adc"), asc("vec_id"))
-    val short = scored.withColumn("__rn", row_number().over(ws))
-      .filter(col("__rn") <= rerankK).select("qid", "vec_id").distinct()
-    val qvecs = unitArrays(exQ)
-      .select(col("vec_id").as("qid"), col("ux").as("qx"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos_sim"), asc("vec_id"))
-    short.join(vectors.select(col("vec_id"), col("ux")), "vec_id")
-      .join(bq(qvecs), "qid")
-      .select(col("qid"), col("vec_id"),
-        round(aggregate(zip_with(col("ux"), col("qx"), (a, b) => a * b),
-          lit(0.0), (acc, v) => acc + v), 9).as("cos_sim"))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= topK)
-      .orderBy("qid", "rnk")
-  }
-
-  /** Driver-contract form of [[ivfPqKnnJoinResidual]]: first 8 vectors
-    * as the query batch from the process-shared residual index — the
-    * [[ivfPqKnnJoinQuery]] convention on the residual variant. */
-  def ivfPqKnnJoinResidualQuery(spark: SparkSession,
-      dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    ivfPqKnnJoinResidual(sharedResidualIndex(spark, dir),
-      emb.filter(col("vec_id") < 8))
-  }
-
-  /** The process-shared residual index for `dir` (counterpart of
-    * [[sharedIvfPqIndex]] at the same fixed dials). */
-  private def sharedResidualIndex(spark: SparkSession,
-      dir: String): graft.store.ModelStore =
-    graft.store.ModelStore.shared(spark, Seq("ivfpq-residual",
-      graft.store.ArtifactCache.tableFingerprint(dir, "embeddings"),
-      "kCells=4", "m=4", "k=8", "iters=2", "dim=64")) { store =>
-      saveIvfPqResidualIndex(t(spark, dir, "embeddings"), store); ()
-    }
-
-  /** [[annRecall]] for the residual variant — same sweep, same truth,
-    * same output schema; the row that makes the residual-encoding
-    * quality claim measurable and oracle-pinned (0.7 → 0.9 at the
-    * fixed dials on sf0.1). */
-  def annRecallResidual(spark: SparkSession, dir: String, topK: Int = 10,
-      nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    // truth scan launched on the pooled thread (guide §2.6): the
-    // exact scan is independent of the index artifacts, so the
-    // store lookup/build below overlaps it; awaited at the join
-    val truthF = truthTopKAsync(spark, dir, 0L, topK)
-    val store = sharedResidualIndex(spark, dir)
-    val qv = queryVecOf(emb, 0L)
-    // one-scan sweep: every nprobe branch filters the shared
-    // materialized shortlist (bit-equal per np to the per-np serve)
-    val rr = sweepRerankedPersisted(store, qv, qId = 0L,
-      npMax = nprobes.max)
+  /** The recall rows of a sweep: each nprobe branch's top-k
+    * ([[sweepTopK]]) intersected with the exact top-k `truth`, one row
+    * per nprobe — (nprobe, extra…, k, n_hits, recall). The intersection
+    * joins two k-row frames: driver-bounded regardless of corpus size. */
+  private[graft] def recallRows(rr: DataFrame, truth: () => DataFrame,
+      nprobes: Seq[Int], topK: Int,
+      extra: Seq[Column] = Seq.empty): DataFrame =
     nprobes.map { np =>
       sweepTopK(rr, np, topK)
-        .join(truthF(), "vec_id")
+        .join(truth(), "vec_id")
         .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), lit(topK).as("k"), col("n_hits"),
-          (col("n_hits").cast("double") / topK).as("recall"))
+        .select((lit(np).as("nprobe") +: extra) ++ Seq(lit(topK).as("k"),
+          col("n_hits"), (col("n_hits").cast("double") / topK).as("recall"))
+          : _*)
     }.reduce(_ union _).orderBy("nprobe")
-  }
 
   /** Quantizer-only store version: train the coarse quantizer and PQ
     * codebooks (plus the dials record) with EMPTY data artifacts — the
@@ -1680,49 +1438,24 @@ object Similarity {
     saveIvfPqIndexTrainedOn(trainEmb, trainEmb.limit(0), store, kCells,
       m, k, iters, dim, spill)
 
-  /** Process-shared QUANTIZER-ONLY store over `dir`'s embeddings at
-    * the default dials — the [[sharedIvfPqIndex]] discipline for the
-    * incremental-ingest contract queries, which each train the same
-    * frozen quantizers and then supply every coded row through their
-    * own external ingest dirs. Training is deterministic, so sharing
-    * is oracle-invisible. Consumers MUST treat the store as read-only
-    * (no compaction/save — those queries keep scratch stores). */
-  private[graft] def sharedQuantizers(spark: SparkSession,
-      dir: String): graft.store.ModelStore =
-    graft.store.ModelStore.shared(spark, Seq("quant-raw",
-      graft.store.ArtifactCache.tableFingerprint(dir, "embeddings"),
-      "kCells=4", "m=4", "k=8", "iters=2", "dim=64")) { store =>
-      saveQuantizers(t(spark, dir, "embeddings"), store); ()
-    }
-
-  /** Residual twin of [[sharedQuantizers]]. */
-  private[graft] def sharedResidualQuantizers(spark: SparkSession,
-      dir: String): graft.store.ModelStore =
-    graft.store.ModelStore.shared(spark, Seq("quant-residual",
+  /** Process-shared QUANTIZER-ONLY store of `variant` over `dir`'s
+    * embeddings at the default dials — the [[sharedIvfPqIndex]]
+    * discipline for the incremental-ingest contract queries, which each
+    * train the same frozen quantizers and then supply every coded row
+    * through their own external ingest dirs. Training is deterministic,
+    * so sharing is oracle-invisible. Consumers MUST treat the store as
+    * read-only (no compaction/save — those queries keep scratch
+    * stores). */
+  private[graft] def sharedQuantizers(spark: SparkSession, dir: String,
+      variant: String = "raw"): graft.store.ModelStore =
+    graft.store.ModelStore.shared(spark, Seq(s"quant-$variant",
       graft.store.ArtifactCache.tableFingerprint(dir, "embeddings"),
       "kCells=4", "m=4", "k=8", "iters=2", "dim=64")) { store =>
       val emb = t(spark, dir, "embeddings")
-      saveIvfPqResidualIndexTrainedOn(emb, emb.limit(0), store); ()
+      saveIvfPqIndexTrainedOn(emb, emb.limit(0), store,
+        variant = variant); ()
     }
 
-  /** Merge PARALLEL-ENCODED shards into one served index version — the
-    * distributed-build completion of the ANN stack: quantizers train
-    * once ([[saveQuantizers]] or any existing version), each worker
-    * encodes its slice against them ([[encodeWithIndex]] — two
-    * broadcast joins, no training jobs, shards never talk to each
-    * other), and this call writes cells/codes/vectors as the union of
-    * the shard rows while carrying the quantizers forward. The version
-    * flip serves the merged index atomically
-    * ([[graft.store.ModelStore.save]]).
-    *
-    * Because encoding is pointwise per vector under frozen quantizers,
-    * the merged artifacts are IDENTICAL to a single-job encode of the
-    * shard union — bit-equal serving, which the `q_ivfpq_merged` oracle
-    * row pins against the single-build SQL. The disjointness audit is
-    * one count-distinct pass (a vec_id in two shards would serve
-    * twice); skip it only when the upstream split is provably keyed.
-    * At 10⁸ vectors the merge itself moves no vectors through the
-    * driver and performs no shuffle beyond the union write. */
   /** Synthesize the dials record for a PRE-DIALS legacy index from what
     * the artifacts themselves prove (ADVICE r12: the previous hard-coded
     * m/k/dim would lie about a legacy store built at other dials, and
@@ -1747,6 +1480,25 @@ object Similarity {
       lit(-1).as("iters"), lit(dim).as("dim"), lit("raw").as("variant"))
   }
 
+  /** Merge PARALLEL-ENCODED shards into one served index version — the
+    * distributed-build completion of the ANN stack: quantizers train
+    * once ([[saveQuantizers]] or any existing version), each worker
+    * encodes its slice against them ([[encodeWithIndex]] — two
+    * broadcast joins, no training jobs, shards never talk to each
+    * other), and this call writes cells/codes/vectors as the union of
+    * the shard rows while carrying the quantizers forward. The version
+    * flip serves the merged index atomically
+    * ([[graft.store.ModelStore.save]]). Variant-agnostic: shards match
+    * the store's variant by construction, and the dials carry forward.
+    *
+    * Because encoding is pointwise per vector under frozen quantizers,
+    * the merged artifacts are IDENTICAL to a single-job encode of the
+    * shard union — bit-equal serving, which the `q_ivfpq_merged` oracle
+    * row pins against the single-build SQL. The disjointness audit is
+    * one count-distinct pass (a vec_id in two shards would serve
+    * twice); skip it only when the upstream split is provably keyed.
+    * At 10⁸ vectors the merge itself moves no vectors through the
+    * driver and performs no shuffle beyond the union write. */
   def saveMergedIndex(store: graft.store.ModelStore,
       shards: Seq[DataFrame], m: Int = 4,
       requireDisjoint: Boolean = true): Long = {
@@ -1812,6 +1564,7 @@ object Similarity {
     }
   }
 
+
   /** ANN quality measurement (VERDICT r7 #5): recall@k of IVF-PQ
     * search against brute-force cosine over the same corpus, one row
     * per nprobe — the tuning dial real ANN deployments watch (recall
@@ -1823,62 +1576,54 @@ object Similarity {
     * cosine — fixed by normalizing at ingest ([[explodeVecsUnit]]:
     * on unit vectors L2 order ≡ cosine order, so recall is monotone
     * in nprobe and bounded only by PQ quantization error; VERDICT r8
-    * #2 / ModelStoreSpec pins both).
-    * Train ONCE into a scratch store, serve each
-    * nprobe from the persisted index (zero retraining in the sweep —
-    * the train-once/serve-many shape), intersect with the exact top-k:
-    * both sides deterministic, so the row is oracle-checkable. The
-    * intersection joins two k-row frames — driver-bounded regardless
-    * of corpus size. Note the measure compares ADC squared-L2 ranking
-    * to exact-cosine ranking, so even the exhaustive probe can score
-    * < 1.0: the residual IS the quantization error (m, k dials).
-    * Serves every nprobe from the PROCESS-SHARED index
-    * ([[sharedIvfPqIndex]]): zero training jobs in the sweep, and zero
-    * when another serve-only query already built the index. */
+    * #2 / ModelStoreSpec pins both). Note the measure compares ADC
+    * squared-L2 ranking to exact-cosine ranking, so even the exhaustive
+    * probe can score < 1.0: the residual IS the quantization error
+    * (m, k dials).
+    *
+    * One body for the four recall rows: `variant` picks the
+    * process-shared index it serves ([[sharedIvfPqIndex]] — zero
+    * training jobs when another serve-only query already built it;
+    * `q_ann_recall_residual` makes the residual-encoding quality claim
+    * measurable), and `pred` (`q_ann_filtered*`: [[allowedThirds]])
+    * filters the serve AND the truth — filtered search is graded
+    * against filtered truth, never unfiltered truth (a correct filtered
+    * serve can return vectors the unfiltered top-k excludes). Every
+    * nprobe is one branch of a single sweep ([[sweepRerankedOver]]). */
   def annRecall(spark: SparkSession, dir: String, topK: Int = 10,
-      nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+      nprobes: Seq[Int] = Seq(1, 2, 4), variant: String = "raw",
+      pred: Option[Column] = None): DataFrame = {
     val emb = t(spark, dir, "embeddings")
     // truth scan launched on the pooled thread (guide §2.6): the
     // exact scan is independent of the index artifacts, so the
     // store lookup/build below overlaps it; awaited at the join
-    val truthF = truthTopKAsync(spark, dir, 0L, topK)
-    val store = sharedIvfPqIndex(spark, dir)
-    val qv = queryVecOf(emb, 0L)
-    // one-scan sweep: every nprobe branch filters the shared
-    // materialized shortlist (bit-equal per np to the per-np serve)
-    val rr = sweepRerankedPersisted(store, qv, qId = 0L,
-      npMax = nprobes.max)
-    nprobes.map { np =>
-      sweepTopK(rr, np, topK)
-        .join(truthF(), "vec_id")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), lit(topK).as("k"), col("n_hits"),
-          (col("n_hits").cast("double") / topK).as("recall"))
-    }.reduce(_ union _).orderBy("nprobe")
+    val truthF = truthTopKAsync(spark, dir, 0L, topK,
+      pred.getOrElse(lit(true)))
+    val store = sharedIvfPqIndex(spark, dir, variant)
+    val rr = sweepRerankedPersisted(store, queryVecOf(emb, 0L), qId = 0L,
+      npMax = nprobes.max, pred = pred)
+    recallRows(rr, truthF, nprobes, topK)
   }
 
   /** Predicate-FILTERED IVF-PQ search — the production vector-DB
     * operation ("vectors WHERE lang = 'en'"): serve the top-k among
-    * only the rows satisfying `pred`, from a persisted raw index. The
-    * filter applies to the CANDIDATE coded frame before ADC scoring
-    * (pre-filtering semantics: the shortlist is built from allowed rows
-    * only, so a selective filter can never starve the top-k behind
-    * disallowed neighbors — the failure of post-filtering a fixed-k
-    * result). A predicate over the coded columns (vec_id, cid) pushes
-    * into the parquet scan as a data filter under the probe's
-    * partition pruning; an arbitrary metadata filter is the
+    * only the rows satisfying `pred`, from a persisted index of either
+    * variant. The filter applies to the CANDIDATE coded frame before
+    * ADC scoring (pre-filtering semantics: the shortlist is built from
+    * allowed rows only, so a selective filter can never starve the
+    * top-k behind disallowed neighbors — the failure of post-filtering
+    * a fixed-k result). A predicate over the coded columns (vec_id,
+    * cid) pushes into the parquet scan as a data filter under the
+    * probe's partition pruning; an arbitrary metadata filter is the
     * [[ivfPqSearchAllowed]] semi-join form. Probe, ADC, per-cell
     * shortlist, and exact rerank are [[ivfPqSearchOver]] verbatim —
     * filtered search cannot diverge from unfiltered on scoring. */
   def ivfPqSearchFiltered(store: graft.store.ModelStore, pred: Column,
       qVec: Map[Int, Double], qId: Long = -1L, topK: Int = 10,
       nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      rerankK: Int = 100): DataFrame = {
-    requireVariant(store, "raw", "ivfPqSearchFiltered")
-    ivfPqSearchOver(store.load("coarse"),
-      codedFrame(store.load).filter(pred), store.load("vectors"),
-      store.load("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
-  }
+      rerankK: Int = 100): DataFrame =
+    ivfPqSearchOver(pinnedFrames(store).filter(pred), qVec, qId, topK,
+      nprobe, m, dim, rerankK)
 
   /** [[ivfPqSearchFiltered]] with the allowed set as an ids FRAME
     * (vec_id) instead of a predicate — the shape a metadata filter
@@ -1892,213 +1637,70 @@ object Similarity {
       allowed: DataFrame, qVec: Map[Int, Double], qId: Long = -1L,
       topK: Int = 10, nprobe: Int = 2, m: Int = 4, dim: Int = 64,
       rerankK: Int = 100): DataFrame = {
-    requireVariant(store, "raw", "ivfPqSearchAllowed")
-    ivfPqSearchOver(store.load("coarse"),
-      codedFrame(store.load)
-        .join(allowed.select("vec_id").distinct(), Seq("vec_id"),
-          "left_semi"),
-      store.load("vectors"),
-      store.load("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
+    val ix = pinnedFrames(store)
+    ivfPqSearchOver(ix.copy(coded = ix.coded.join(
+        allowed.select("vec_id").distinct(), Seq("vec_id"), "left_semi")),
+      qVec, qId, topK, nprobe, m, dim, rerankK)
   }
 
-  /** [[ivfPqSearchFiltered]] for a RESIDUAL-coded store — the filtered
-    * serve dispatches per variant exactly like the plain serve, so the
-    * filtered matrix covers both encodings. Same pre-filtering
-    * contract: the predicate lands on the candidate coded frame before
-    * the per-cell residual ADC. */
-  def ivfPqSearchFilteredResidual(store: graft.store.ModelStore,
-      pred: Column, qVec: Map[Int, Double], qId: Long = -1L,
-      topK: Int = 10, nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      rerankK: Int = 100): DataFrame = {
-    requireVariant(store, "residual", "ivfPqSearchFilteredResidual")
-    ivfPqSearchResidualOver(store.load("coarse"),
-      codedFrame(store.load).filter(pred), store.load("vectors"),
-      store.load("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
-  }
-
-  /** Filtered-recall sweep over the residual index
-    * (`q_ann_filtered_residual`): [[annRecallFiltered]]'s residual
-    * twin — filtered serve vs filtered truth, both variants of the
-    * filtered matrix oracle-pinned. */
-  def annRecallFilteredResidual(spark: SparkSession, dir: String,
-      topK: Int = 10, nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    val pred = pmod(col("vec_id"), lit(3)) === 1
-    // truth scan launched on the pooled thread (guide §2.6): the
-    // exact scan is independent of the index artifacts, so the
-    // store lookup/build below overlaps it; awaited at the join
-    val truthF = truthTopKAsync(spark, dir, 0L, topK, pred)
-    val store = sharedResidualIndex(spark, dir)
-    val qv = queryVecOf(emb, 0L)
-    // one-scan sweep: every nprobe branch filters the shared
-    // materialized shortlist (bit-equal per np to the per-np serve)
-    val rr = sweepRerankedPersisted(store, qv, qId = 0L,
-      npMax = nprobes.max, pred = Some(pred))
-    nprobes.map { np =>
-      sweepTopK(rr, np, topK)
-        .join(truthF(), "vec_id")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), lit(topK).as("k"), col("n_hits"),
-          (col("n_hits").cast("double") / topK).as("recall"))
-    }.reduce(_ union _).orderBy("nprobe")
-  }
-
-  /** Filtered-recall sweep (`q_ann_filtered`): [[ivfPqSearchFiltered]]
-    * with the deterministic `vec_id % 3 = 1` predicate over the
-    * process-shared index, each nprobe's top-10 intersected with the
-    * brute-force cosine top-10 over the SAME allowed set — filtered
-    * search is graded against filtered truth, never unfiltered truth
-    * (a correct filtered serve can return vectors the unfiltered
-    * top-10 excludes). */
-  def annRecallFiltered(spark: SparkSession, dir: String,
-      topK: Int = 10, nprobes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    val pred = pmod(col("vec_id"), lit(3)) === 1
-    // truth scan launched on the pooled thread (guide §2.6): the
-    // exact scan is independent of the index artifacts, so the
-    // store lookup/build below overlaps it; awaited at the join
-    val truthF = truthTopKAsync(spark, dir, 0L, topK, pred)
-    val store = sharedIvfPqIndex(spark, dir)
-    val qv = queryVecOf(emb, 0L)
-    // one-scan sweep: every nprobe branch filters the shared
-    // materialized shortlist (bit-equal per np to the per-np serve)
-    val rr = sweepRerankedPersisted(store, qv, qId = 0L,
-      npMax = nprobes.max, pred = Some(pred))
-    nprobes.map { np =>
-      sweepTopK(rr, np, topK)
-        .join(truthF(), "vec_id")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), lit(topK).as("k"), col("n_hits"),
-          (col("n_hits").cast("double") / topK).as("recall"))
-    }.reduce(_ union _).orderBy("nprobe")
-  }
-
-  /** Probed RANGE search over a persisted raw index — FAISS
-    * `range_search` on an IVF-PQ layout: probe `nprobe` cells, keep
-    * candidates whose ADC distance clears a slackened radius bound,
-    * exact-rerank the survivors and threshold on true cosine. On the
-    * unit domain squared L2 is 2 − 2·cos, so the ADC pre-filter bound
-    * is `adcSlack × (2 − 2·minSim)` — slack absorbs quantization error
+  /** Probed RANGE search over a persisted index — FAISS `range_search`
+    * on an IVF-PQ layout: probe `nprobe` cells, keep candidates whose
+    * ADC distance clears a slackened radius bound, exact-rerank the
+    * survivors and threshold on true cosine. On the unit domain squared
+    * L2 is 2 − 2·cos, so the ADC pre-filter bound is
+    * `adcSlack × (2 − 2·minSim)` — slack absorbs quantization error
     * (ADC measures distance to the RECONSTRUCTION, not the vector);
     * candidates it drops are the probed variant's approximation, the
     * same contract as top-k's nprobe miss. At full probe and generous
     * slack this equals [[cosineRange]] restricted to nothing — the
-    * completeness dial (spec-pinned). The ADC pass reads m bytes per
-    * candidate in nprobe/nlist of the (cell-partitioned) codes; only
-    * survivors of BOTH the probe and the ADC bound touch their stored
-    * full-precision vectors. The shortlist broadcast is bounded by the
-    * probed cells' population × the bound's selectivity — for a
-    * pathological slack pass `broadcastShortlist = false`. */
+    * completeness dial (spec-pinned). The bound holds for a residual
+    * index too (VERDICT r13 #3): r_q − r_x = (q − c) − (x − c) cancels
+    * the cell centroid, so each candidate's residual ADC value
+    * approximates the same global ‖q − x‖² once its own cell's table
+    * scored it. The ADC pass reads m bytes per candidate in
+    * nprobe/nlist of the (cell-partitioned) codes; only survivors of
+    * BOTH the probe and the ADC bound touch their stored full-precision
+    * vectors. The shortlist broadcast is bounded by the probed cells'
+    * population × the bound's selectivity — for a pathological slack
+    * pass `broadcastShortlist = false`. */
   def ivfPqRangeSearch(store: graft.store.ModelStore,
       qVec: Map[Int, Double], qId: Long = -1L, minSim: Double = 0.2,
       nprobe: Int = 2, m: Int = 4, dim: Int = 64,
       adcSlack: Double = 2.0,
-      broadcastShortlist: Boolean = true): DataFrame = {
-    requireVariant(store, "raw", "ivfPqRangeSearch")
-    ivfPqRangeSearchOver(store.load("coarse"), codedFrame(store.load),
-      store.load("vectors"), store.load("codebooks"), qVec, qId,
-      minSim, nprobe, m, dim, adcSlack, broadcastShortlist)
-  }
+      broadcastShortlist: Boolean = true): DataFrame =
+    ivfPqRangeSearchOver(pinnedFrames(store), qVec, qId, minSim, nprobe,
+      m, dim, adcSlack, broadcastShortlist)
 
   /** Range search over EXPLICIT frames — the [[ivfPqSearchOver]] split
     * applied to the radius query, so the persisted path and the
     * streaming-incremental union
     * ([[graft.streaming.StreamingAnn.rangeSearchIncremental]]) share
     * one probe+ADC-bound+exact-threshold body. */
-  private[graft] def ivfPqRangeSearchOver(coarse: DataFrame,
-      coded: DataFrame, vectors: DataFrame, codebooks: DataFrame,
+  private[graft] def ivfPqRangeSearchOver(ix: IndexFrames,
       qVec: Map[Int, Double], qId: Long = -1L, minSim: Double = 0.2,
       nprobe: Int = 2, m: Int = 4, dim: Int = 64,
       adcSlack: Double = 2.0,
       broadcastShortlist: Boolean = true): DataFrame = {
-    val probed = nearestCells(coarse.collect(), qVec, nprobe)
-    val cand = coded.drop("ux")
-      .filter(col("cid").isin(probed: _*) && col("vec_id") =!= qId)
     // round the bound to the ADC values' own 9-dec scale: the raw
     // product 2.0·(2 − 2·0.2) lands one ulp BELOW the literal 3.2 the
     // oracle writes, and a candidate whose rounded ADC is exactly 3.2
     // would then split the engines
     val thr = BigDecimal(adcSlack * (2.0 - 2.0 * minSim))
       .setScale(9, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val short = adcScored(cand, codebooks, qVec, m, dim / m)
-      .filter(col("adc") <= thr)
-      .select("vec_id").distinct()
-    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
-    vectors.select(col("vec_id"), col("ux"))
-      .join(if (broadcastShortlist) broadcast(short) else short, "vec_id")
-      .select(col("vec_id"),
-        round(aggregate(zip_with(col("ux"), typedlit(qArr),
-          (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
-          .as("cos_sim"))
+    val (_, scored) = probeScored(ix, qVec, qId, nprobe, m, dim)
+    val short = scored.filter(col("adc") <= thr).select("vec_id").distinct()
+    reranked(ix.vectors, if (broadcastShortlist) broadcast(short) else short,
+      qVec, dim)
       .filter(col("cos_sim") >= minSim)
       .orderBy(desc("cos_sim"), asc("vec_id"))
   }
 
-  /** Driver-contract form of [[ivfPqRangeSearch]] (`q_ann_range`):
-    * radius 0.2 at nprobe 2 from the process-shared index. */
-  def ivfPqRangeSearchQuery(spark: SparkSession, dir: String): DataFrame =
-    ivfPqRangeSearch(sharedIvfPqIndex(spark, dir),
-      queryVecOf(t(spark, dir, "embeddings"), 0L), qId = 0L)
-
-  /** Probed RANGE search over a persisted RESIDUAL index — the last
-    * empty cell of the radius × variant matrix (VERDICT r13 #3). The
-    * r13 refusal reasoned that the residual ADC bound is
-    * per-probed-cell; that is the TABLE construction, not the bound:
-    * each candidate's residual ADC value approximates the same global
-    * ‖q − x‖² the raw variant bounds — r_q − r_x = (q − c) − (x − c)
-    * cancels the cell centroid — so the one slackened radius bound
-    * applies to every probed cell's values after its own table join.
-    * Same contract as the raw radius: probed ⊆ exact, candidates the
-    * slack drops are the probed approximation, full probe + generous
-    * slack == [[cosineRange]] (spec-pinned). */
-  def ivfPqRangeSearchResidual(store: graft.store.ModelStore,
-      qVec: Map[Int, Double], qId: Long = -1L, minSim: Double = 0.2,
-      nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      adcSlack: Double = 2.0,
-      broadcastShortlist: Boolean = true): DataFrame = {
-    requireVariant(store, "residual", "ivfPqRangeSearchResidual")
-    ivfPqRangeSearchResidualOver(store.load("coarse"),
-      codedFrame(store.load), store.load("vectors"),
-      store.load("codebooks"), qVec, qId, minSim, nprobe, m, dim,
-      adcSlack, broadcastShortlist)
-  }
-
-  /** Residual range search over EXPLICIT frames — the
-    * [[ivfPqRangeSearchOver]] split for the residual variant, shared by
-    * the persisted path and the streaming-incremental union. The
-    * candidate scorer is [[residualAdcScored]] — the exact per-cell
-    * tables the residual top-k serves with — bounded by the same
-    * 9-dec-rounded slackened radius the raw body uses, then the
-    * survivors exact-reranked and thresholded on true cosine. */
-  private[graft] def ivfPqRangeSearchResidualOver(coarse: DataFrame,
-      coded: DataFrame, vectors: DataFrame, codebooks: DataFrame,
-      qVec: Map[Int, Double], qId: Long = -1L, minSim: Double = 0.2,
-      nprobe: Int = 2, m: Int = 4, dim: Int = 64,
-      adcSlack: Double = 2.0,
-      broadcastShortlist: Boolean = true): DataFrame = {
-    val thr = BigDecimal(adcSlack * (2.0 - 2.0 * minSim))
-      .setScale(9, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val short = residualAdcScored(coarse, coded, codebooks, qVec, qId,
-      nprobe, m, dim)
-      .filter(col("adc") <= thr)
-      .select("vec_id").distinct()
-    val qArr = (0 until dim).map(i => qVec.getOrElse(i, 0.0))
-    vectors.select(col("vec_id"), col("ux"))
-      .join(if (broadcastShortlist) broadcast(short) else short, "vec_id")
-      .select(col("vec_id"),
-        round(aggregate(zip_with(col("ux"), typedlit(qArr),
-          (a, b) => a * b), lit(0.0), (acc, v) => acc + v), 9)
-          .as("cos_sim"))
-      .filter(col("cos_sim") >= minSim)
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-  }
-
-  /** Driver-contract form of [[ivfPqRangeSearchResidual]]
-    * (`q_ann_range_residual`): radius 0.2 at nprobe 2 from the
-    * process-shared residual index. */
-  def ivfPqRangeSearchResidualQuery(spark: SparkSession,
-      dir: String): DataFrame =
-    ivfPqRangeSearchResidual(sharedResidualIndex(spark, dir),
+  /** Driver-contract form of [[ivfPqRangeSearch]] (`q_ann_range`,
+    * `q_ann_range_residual`): radius 0.2 at nprobe 2 from the
+    * process-shared index of `variant`. */
+  def ivfPqRangeSearchQuery(spark: SparkSession, dir: String,
+      variant: String = "raw"): DataFrame =
+    ivfPqRangeSearch(sharedIvfPqIndex(spark, dir, variant),
       queryVecOf(t(spark, dir, "embeddings"), 0L), qId = 0L)
 
   /** Production IVF dial rule (the FAISS sizing practice): nlist grows
@@ -2204,14 +1806,8 @@ object Similarity {
     // materialized shortlist (bit-equal per np to the per-np serve)
     val rr = sweepRerankedPersisted(store, qv, qId = 0L,
       npMax = nprobes.max, rerankK = 100 * sp)
-    nprobes.map { np =>
-      sweepTopK(rr, np, topK)
-        .join(truthF(), "vec_id")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), lit(kCells).as("n_cells"),
-          lit(sp).as("spill"), lit(topK).as("k"), col("n_hits"),
-          (col("n_hits").cast("double") / topK).as("recall"))
-    }.reduce(_ union _).orderBy("nprobe")
+    recallRows(rr, truthF, nprobes, topK,
+      Seq(lit(kCells).as("n_cells"), lit(sp).as("spill")))
   }
 
   /** Johnson–Lindenstrauss random projection: dim → outDim with the

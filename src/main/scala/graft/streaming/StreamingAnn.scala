@@ -34,8 +34,8 @@ object StreamingAnn {
 
   /** Assign+encode one increment against the frozen quantizers and write
     * it to `codesPath/batch=N` — idempotent foreachBatch body (the
-    * [[StreamingDedup.dedupBatch]] replay contract). Dispatches on the
-    * store's own `variant` dial ([[Similarity.encodeForIndex]]): a
+    * [[StreamingDedup.dedupBatch]] replay contract). The encode reads
+    * the store's own `variant` dial ([[Similarity.encodeWithIndex]]): a
     * residual store gets residual codes, a raw store raw codes —
     * incremental maintenance of BOTH variants through one body.
     *
@@ -50,7 +50,7 @@ object StreamingAnn {
   def annIngestBatch(spark: SparkSession, store: ModelStore,
       codesPath: String, m: Int = 4, dim: Int = 64)(
       batch: DataFrame, batchId: Long): Unit =
-    Similarity.encodeForIndex(store, batch, m, dim)
+    Similarity.encodeWithIndex(store, batch, m, dim)
       .write.mode("overwrite").partitionBy("cid")
       .parquet(s"$codesPath/batch=$batchId")
 
@@ -119,16 +119,6 @@ object StreamingAnn {
         .select("vec_id", "embedding"),
       batchId)
   }
-
-  /** Wire a (vec_id, embedding, op) CDC stream through the
-    * upsert/delete ingest. */
-  def incrementalAnnUpsert(vecs: DataFrame, store: ModelStore,
-      codesPath: String, tombPath: String, checkpoint: String,
-      m: Int = 4, dim: Int = 64): DataStreamWriter[Row] =
-    vecs.writeStream
-      .foreachBatch(annUpsertBatch(vecs.sparkSession, store, codesPath,
-        tombPath, m, dim) _)
-      .option("checkpointLocation", checkpoint)
 
   // ---- FOLD WATERMARK (ADVICE r13, high): a compaction or rebuild
   // FOLDS the resolved effect of every increment and tombstone batch
@@ -320,18 +310,10 @@ object StreamingAnn {
       .map(w => Map("folded" -> foldedPart(emb.sparkSession, w)))
       .getOrElse(Map.empty[String, DataFrame])
     // the drift observable (assignment residual against the coarse
-    // table) is variant-independent, so the reference snapshot below is
-    // shared; only the PQ-encoding arm dispatches
-    val v = variant match {
-      case "residual" =>
-        require(spill == 1,
-          "residual indexes are single-assigned (spill=1): the " +
-            "residual-of-THE-cell is what ADC corrects")
-        Similarity.saveIvfPqResidualIndexTrainedOn(train, emb,
-          indexStore, kCells, m, k, iters, dim, extraParts = extra)
-      case _ => Similarity.saveIvfPqIndexTrainedOn(train, emb,
-        indexStore, kCells, m, k, iters, dim, spill, extraParts = extra)
-    }
+    // table) is variant-independent, so the reference snapshot below
+    // serves either encoding variant
+    val v = Similarity.saveIvfPqIndexTrainedOn(train, emb, indexStore,
+      kCells, m, k, iters, dim, spill, variant, extra)
     saveDriftReference(calib, indexStore, driftStore, buckets)
     v
   }
@@ -515,7 +497,10 @@ object StreamingAnn {
           countDistinct(when(pmod(col("vec_id"), lit(calibMod)) =!= 0,
             col("vec_id"))).as("trainN")).first()
         val kc = Similarity.autoNlist(cnt.getLong(0), cnt.getLong(1))
-        val sp = if (variant == "residual") 1 else Similarity.autoSpill(kc)
+        // a residual index is single-assigned (its ADC tables are per
+        // cell), so only a raw rebuild spills
+        val sp = if (Similarity.cellKeyed(variant)) 1
+          else Similarity.autoSpill(kc)
         buildIndexWithDriftReference(corpus, indexStore, driftStore,
           calibMod, buckets, kc, m, k, iters, dim, spill = sp,
           variant = variant, foldedMax = wm)
@@ -643,46 +628,6 @@ object StreamingAnn {
       batchId)
   }
 
-  /** Wire a (vec_id, embedding, op) CDC stream through the complete
-    * delete-aware maintenance loop. */
-  def incrementalAnnMaintainUpserts(vecs: DataFrame,
-      indexStore: ModelStore, driftStore: ModelStore, base: DataFrame,
-      codesPath: String, monitorPath: String, rawPath: String,
-      tombPath: String, checkpoint: String, calibMod: Int = 4,
-      threshold: Double = 0.2, buckets: Int = 10, kCells: Int = 4,
-      m: Int = 4, k: Int = 8, iters: Int = 2, dim: Int = 64,
-      minRebuildN: Long = 50L, autoDial: Boolean = false,
-      compactRatio: Double = 0.5, minCompactN: Long = 100L,
-      gcKeepVersions: Int = 0, gcPinned: Set[Long] = Set.empty,
-      gcTagPath: Option[String] = None): DataStreamWriter[Row] =
-    vecs.writeStream
-      .foreachBatch(annMaintainUpsertBatch(vecs.sparkSession, indexStore,
-        driftStore, base, codesPath, monitorPath, rawPath, tombPath,
-        calibMod, threshold, buckets, kCells, m, k, iters, dim,
-        minRebuildN, autoDial, compactRatio, minCompactN,
-        gcKeepVersions, gcPinned, gcTagPath) _)
-      .option("checkpointLocation", checkpoint)
-
-  /** Wire a (vec_id, embedding) stream through the complete maintenance
-    * loop — ingest + drift-triggered retrain + volume-triggered
-    * compaction, one call. */
-  def incrementalAnnMaintain(vecs: DataFrame, indexStore: ModelStore,
-      driftStore: ModelStore, base: DataFrame, codesPath: String,
-      monitorPath: String, rawPath: String, checkpoint: String,
-      calibMod: Int = 4, threshold: Double = 0.2, buckets: Int = 10,
-      kCells: Int = 4, m: Int = 4, k: Int = 8, iters: Int = 2,
-      dim: Int = 64, minRebuildN: Long = 50L, autoDial: Boolean = false,
-      compactRatio: Double = 0.5, minCompactN: Long = 100L,
-      gcKeepVersions: Int = 0, gcPinned: Set[Long] = Set.empty,
-      gcTagPath: Option[String] = None): DataStreamWriter[Row] =
-    vecs.writeStream
-      .foreachBatch(annMaintainBatch(vecs.sparkSession, indexStore,
-        driftStore, base, codesPath, monitorPath, rawPath, calibMod,
-        threshold, buckets, kCells, m, k, iters, dim, minRebuildN,
-        autoDial, compactRatio, minCompactN, None,
-        gcKeepVersions, gcPinned, gcTagPath) _)
-      .option("checkpointLocation", checkpoint)
-
   // ---- AUTOPILOT (VERDICT r14 #4): the maintenance loop's retention
   // was all manual dials — gcKeepVersions defaulted off, purgeFolded
   // was caller-invoked with a base-rewrite contract the caller had to
@@ -777,27 +722,6 @@ object StreamingAnn {
     }
   }
 
-  /** Wire a plain or CDC vector stream through [[annAutopilot]]. */
-  def incrementalAnnAutopilot(vecs: DataFrame, indexStore: ModelStore,
-      driftStore: ModelStore, baseStore: ModelStore, codesPath: String,
-      monitorPath: String, rawPath: String, tombPath: String,
-      checkpoint: String, calibMod: Int = 4, threshold: Double = 0.2,
-      buckets: Int = 10, kCells: Int = 4, m: Int = 4, k: Int = 8,
-      iters: Int = 2, dim: Int = 64, minRebuildN: Long = 50L,
-      autoDial: Boolean = false, compactRatio: Double = 0.0,
-      minCompactN: Long = 100L, gcKeepVersions: Int = 2,
-      gcTagPath: Option[String] = None, foldMonitorEvery: Long = 16L,
-      monitorKeepRecent: Long = 8L,
-      purgeKeepRecent: Long = 8L): DataStreamWriter[Row] =
-    vecs.writeStream
-      .foreachBatch(annAutopilot(vecs.sparkSession, indexStore,
-        driftStore, baseStore, codesPath, monitorPath, rawPath,
-        tombPath, calibMod, threshold, buckets, kCells, m, k, iters,
-        dim, minRebuildN, autoDial, compactRatio, minCompactN,
-        gcKeepVersions, gcTagPath, foldMonitorEvery, monitorKeepRecent,
-        purgeKeepRecent) _)
-      .option("checkpointLocation", checkpoint)
-
   /** [[searchIncremental]] against the CURRENT index version's codes
     * dir — the serve-side half of the automated loop's atomic flip.
     * `_CURRENT` is read ONCE and every artifact of the query is served
@@ -819,15 +743,14 @@ object StreamingAnn {
 
   /** Driver-contract query (`q_ann_residual_inc`): the residual index
     * maintained INCREMENTALLY — quantizers train once on the full
-    * corpus with empty data parts ([[Similarity
-    * .saveIvfPqResidualIndexTrainedOn]] with a limit(0) encode arm, the
-    * distributed-build shape), three ascending-vec_id microbatches
-    * supply every coded row through [[annIngestBatch]] (which
-    * dispatches to the residual encoder off the store's variant dial),
-    * and the recall sweep serves through [[searchIncremental]] (which
-    * dispatches the residual ADC body). Because residual assignment and
-    * encoding are pointwise under frozen quantizers, the sweep is
-    * bit-identical to the batch [[Similarity.annRecallResidual]] — the
+    * corpus with empty data parts ([[Similarity.sharedQuantizers]],
+    * the distributed-build shape), three pmod microbatches supply every
+    * coded row through [[annIngestBatch]] (which encodes residually off
+    * the store's variant dial), and the recall sweep serves through
+    * [[sweepRerankedIncremental]] (per-cell residual ADC tables, same
+    * dial). Because residual assignment and encoding are pointwise
+    * under frozen quantizers, the sweep is bit-identical to the batch
+    * residual [[Similarity.annRecall]] — the
     * oracle is that row's SQL VERBATIM, so the driver's DuckDB replay
     * hash-pins that microbatching a residual index is invisible. */
   def annResidualIncrementalQuery(spark: SparkSession,
@@ -843,7 +766,7 @@ object StreamingAnn {
       // process-shared frozen quantizers (read-only here — the ingest
       // writes codes to this query's own dir): one residual training
       // job serves every residual contract row
-      val store = Similarity.sharedResidualQuantizers(spark, dir)
+      val store = Similarity.sharedQuantizers(spark, dir, "residual")
       // microbatch split by pmod, not count-based ranges (ADVICE r12:
       // with sparse/non-contiguous vec_ids a [cuts(b), cuts(b+1)) slice
       // silently drops rows with vec_id >= n, breaking the
@@ -859,14 +782,8 @@ object StreamingAnn {
       // materialized shortlist (bit-equal per np to the per-np serve)
       val rr = sweepRerankedIncremental(spark, store,
         codesDir.toString, qv, qId = 0L, npMax = 4)
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally graft.store.ModelStore.deleteRecursively(codesDir)
   }
 
@@ -880,7 +797,7 @@ object StreamingAnn {
     * carries the frozen quantizers and the deduped coded rows, and
     * pointwise encoding makes those rows bit-equal to the batch
     * build's, so the sweep is bit-identical to the batch recall rows
-    * ([[Similarity.annRecall]] / [[Similarity.annRecallResidual]]) —
+    * ([[Similarity.annRecall]] of the same variant) —
     * each oracle is that row's SQL VERBATIM, hash-pinning that
     * ingest + compaction is invisible to the serving tier (VERDICT
     * r12 #5). */
@@ -910,11 +827,8 @@ object StreamingAnn {
         // jobs) instead of re-running the whole train per call. The
         // profiler measured the per-call train at ~3.2 s / 44 jobs
         // warm — the single biggest phase of both compacted gates.
-        if (variant == "residual")
-          store.cloneCurrentFrom(
-            Similarity.sharedResidualQuantizers(spark, dir))
-        else
-          store.cloneCurrentFrom(Similarity.sharedQuantizers(spark, dir))
+        store.cloneCurrentFrom(
+          Similarity.sharedQuantizers(spark, dir, variant))
         val vp = versionedCodesPath(codesDir.toString, store)
         (0 until 3).foreach { b =>
           annIngestBatch(spark, store, vp)(
@@ -926,14 +840,8 @@ object StreamingAnn {
         // materialized shortlist (bit-equal per np to the per-np serve)
         val rr = sweepRerankedAuto(spark, store, codesDir.toString,
           qv, qId = 0L, npMax = 4)
-        graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-          Similarity.sweepTopK(rr, np, 10)
-            .join(truthF(), "vec_id")
-            .agg(count(lit(1)).as("n_hits"))
-            .select(lit(np).as("nprobe"), lit(10).as("k"),
-              col("n_hits"),
-              (col("n_hits").cast("double") / 10).as("recall"))
-        }.reduce(_ union _).orderBy("nprobe"))
+        graft.Materialize.checkpoint(
+          Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
       }
     } finally graft.store.ModelStore.deleteRecursively(codesDir)
   }
@@ -970,24 +878,17 @@ object StreamingAnn {
       tombPath: Option[String] = None,
       pred: Option[org.apache.spark.sql.Column] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val (coded0, vectors, variant, ld) =
-      unionServeFrames(spark, store, codesPath, version, tombPath, asOf)
     // FILTERED serve over the live index: the allowed-set predicate
     // lands on the RESOLVED candidate frame — after the winners rule
     // and the tombstones, before any scoring — the same pre-filtering
     // contract as the persisted [[Similarity.ivfPqSearchFiltered]],
-    // composed with incremental maintenance and deletes
-    val coded = pred.map(coded0.filter).getOrElse(coded0)
-    // serve with the PINNED version's encoding semantics (ADVICE r11:
-    // the raw-only body served a residual store's codes against raw ADC
-    // tables — silently wrong neighbors, the failure requireVariant
-    // exists to prevent; dispatch makes the mistake unreachable)
-    if (variant == "residual")
-      Similarity.ivfPqSearchResidualOver(ld("coarse"), coded, vectors,
-        ld("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
-    else
-      Similarity.ivfPqSearchOver(ld("coarse"), coded, vectors,
-        ld("codebooks"), qVec, qId, topK, nprobe, m, dim, rerankK)
+    // composed with incremental maintenance and deletes. The served
+    // frames carry the PINNED version's encoding variant (ADVICE r11:
+    // a residual store's codes scored against raw ADC tables return
+    // silently wrong neighbors)
+    Similarity.ivfPqSearchOver(
+      unionServeFrames(spark, store, codesPath, version, tombPath, asOf,
+        pred), qVec, qId, topK, nprobe, m, dim, rerankK)
   }
 
   /** Multi-nprobe sweep core over the live index — the
@@ -1003,11 +904,9 @@ object StreamingAnn {
       tombPath: Option[String] = None,
       pred: Option[org.apache.spark.sql.Column] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val (coded0, vectors, variant, ld) =
-      unionServeFrames(spark, store, codesPath, version, tombPath, asOf)
-    val coded = pred.map(coded0.filter).getOrElse(coded0)
-    Similarity.sweepRerankedOver(ld("coarse"), coded, vectors,
-      ld("codebooks"), qVec, qId, npMax, m, dim, rerankK, variant)
+    Similarity.sweepRerankedOver(
+      unionServeFrames(spark, store, codesPath, version, tombPath, asOf,
+        pred), qVec, qId, npMax, m, dim, rerankK)
   }
 
   /** [[sweepRerankedIncremental]] against the CURRENT version — the
@@ -1035,10 +934,12 @@ object StreamingAnn {
       version = Some(v), tombPath = tombPath, asOf = Some(b))
   }
 
-  /** The deduped base∪increments serve frames plus the pinned variant
-    * and part loader — the ONE union/dedup rule every incremental serve
-    * (single-query and batched, raw and residual) reads, so they cannot
-    * diverge on which coded rows win.
+  /** The deduped base∪increments serve frames of ONE index version
+    * (`version`, or `_CURRENT` read once) with its encoding variant —
+    * the ONE union/dedup rule every incremental serve (single-query and
+    * batched, raw and residual) reads, so they cannot diverge on which
+    * coded rows win. `pred` (the filtered serves) lands on the resolved
+    * candidate frame.
     *
     * The rule — latest batch wins per vec_id, base loses to any
     * increment, ALL rows of the winning batch survive (a spilled index
@@ -1063,17 +964,18 @@ object StreamingAnn {
   private def unionServeFrames(spark: SparkSession, store: ModelStore,
       codesPath: String, version: Option[Long],
       tombPath: Option[String] = None,
-      asOf: Option[Long] = None)
-      : (DataFrame, DataFrame, String, String => DataFrame) = {
-    def ld(part: String): DataFrame = version match {
-      case Some(v) => store.loadAt(v, part)
-      case None => store.load(part)
-    }
+      asOf: Option[Long] = None,
+      pred: Option[org.apache.spark.sql.Column] = None)
+      : Similarity.IndexFrames = {
+    val v = version.orElse(store.currentVersion).getOrElse(
+      throw new IllegalStateException(
+        s"index store ${store.rootPath} is empty"))
+    def ld(part: String): DataFrame = store.loadAt(v, part)
     val baseCodes = Similarity.codedFrame(ld)
     // fold watermark of the version actually served: batches at or
     // below it are already reflected in the base artifacts and must
     // not re-apply (see the FOLD WATERMARK note above)
-    val wm = foldedWatermark(store, version)
+    val wm = foldedWatermark(store, Some(v))
     // a version whose base folded batches AFTER the requested as-of
     // cannot time-travel below its own fold — the post-asOf rows are
     // physically in the base with no batch column to prune them by.
@@ -1123,9 +1025,9 @@ object StreamingAnn {
           ld("vectors").join(broadcast(dead), Seq("vec_id"), "left_anti"))
       case (None, None) => (baseCodes, ld("vectors"))
     }
-    val variant = version.map(Similarity.indexVariantAt(store, _))
-      .getOrElse(Similarity.indexVariant(store))
-    (coded, vectors, variant, ld)
+    Similarity.IndexFrames(ld("coarse"), pred.map(coded.filter)
+      .getOrElse(coded), vectors, ld("codebooks"),
+      Similarity.indexVariantAt(store, v))
   }
 
   /** COMPACTION: fold the streamed increments into the base index
@@ -1160,18 +1062,18 @@ object StreamingAnn {
     val wm = (Seq(foldedWatermark(store, Some(v))) ++
       maxBatchIn(spark, s"$codesPath/v=$v") ++
       tombPath.flatMap(maxBatchIn(spark, _))).max
-    val (coded0, vectors0, _, ld) = unionServeFrames(spark, store,
-      s"$codesPath/v=$v", Some(v), tombPath)
+    val ix = unionServeFrames(spark, store, s"$codesPath/v=$v", Some(v),
+      tombPath)
     // the deduped union feeds FOUR saved parts (cells, codes, vectors,
     // and the empty-part probe inside save) — materialize it once
     // instead of re-evaluating the union/dedup plan per consumer
-    // (ADVICE r12). With no increments coded0 is the base codes frame
+    // (ADVICE r12). With no increments ix.coded is the base codes frame
     // (no ux payload) and the rewrite is a no-op refresh.
-    val coded = graft.Materialize.checkpoint(coded0)
+    val coded = graft.Materialize.checkpoint(ix.coded)
     val vectors =
       if (coded.columns.contains("ux"))
         coded.select("vec_id", "ux").dropDuplicates("vec_id")
-      else vectors0
+      else ix.vectors
     // legacy (pre-dials) stores get a dials record derived from the
     // artifacts themselves, never hard-coded guesses (ADVICE r12)
     val hasDials = store.partNamesAt(v).contains("dials")
@@ -1185,8 +1087,8 @@ object StreamingAnn {
       "vectors" -> vectors,
       "folded" -> foldedPart(spark, wm)) ++
       (if (hasDials) Map.empty[String, DataFrame]
-       else Map("dials" -> Similarity.legacyDialsOf(ld("coarse"),
-         ld("codebooks"), codes, vectors)))
+       else Map("dials" -> Similarity.legacyDialsOf(ix.coarse,
+         ix.codebooks, codes, vectors)))
     store.save(written,
       partitioned = Map("codes" -> Seq("cid")),
       copied = Map("coarse" -> (store, v), "codebooks" -> (store, v)) ++
@@ -1319,9 +1221,9 @@ object StreamingAnn {
     * every query in `queries` against base ∪ every streamed increment —
     * the serving-tier shape against a live index (the single-query
     * [[searchIncremental]] pays a driver round-trip per query). One
-    * deduped union feeds the variant-matched batched serve body
-    * ([[Similarity.ivfPqKnnJoinOver]] /
-    * [[Similarity.ivfPqKnnJoinResidualOver]]); batch == per-query
+    * deduped union feeds the one batched serve body
+    * ([[Similarity.ivfPqKnnJoinOver]], tables keyed by the pinned
+    * version's variant); batch == per-query
     * [[searchIncremental]] holds query by query (spec-pinned, both
     * variants). Returns (qid, vec_id, cos_sim, rnk). */
   def knnJoinIncremental(spark: SparkSession, store: ModelStore,
@@ -1332,17 +1234,10 @@ object StreamingAnn {
       tombPath: Option[String] = None,
       pred: Option[org.apache.spark.sql.Column] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val (coded1, vectors, variant, ld) =
-      unionServeFrames(spark, store, codesPath, version, tombPath, asOf)
-    val coded = pred.map(coded1.filter).getOrElse(coded1)
-    if (variant == "residual")
-      Similarity.ivfPqKnnJoinResidualOver(ld("coarse"), coded, vectors,
-        ld("codebooks"), queries, topK, nprobe, m, dim, rerankK,
-        excludeSelf, broadcastQueries)
-    else
-      Similarity.ivfPqKnnJoinOver(ld("coarse"), coded, vectors,
-        ld("codebooks"), queries, topK, nprobe, m, dim, rerankK,
-        excludeSelf, broadcastQueries)
+    Similarity.ivfPqKnnJoinOver(
+      unionServeFrames(spark, store, codesPath, version, tombPath, asOf,
+        pred), queries, topK, nprobe, m, dim, rerankK, excludeSelf,
+      broadcastQueries)
   }
 
   /** [[knnJoinIncremental]] against the CURRENT version's codes dir —
@@ -1521,14 +1416,8 @@ object StreamingAnn {
       val rr = sweepRerankedIncremental(spark, store,
         codesDir.toString, qv, qId = 0L, npMax = 4,
         tombPath = Some(tombDir.toString))
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally {
       graft.store.ModelStore.deleteRecursively(codesDir)
       graft.store.ModelStore.deleteRecursively(tombDir)
@@ -1546,7 +1435,7 @@ object StreamingAnn {
   def annFilteredIncrementalQuery(spark: SparkSession,
       dir: String): DataFrame = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val pred = pmod(col("vec_id"), lit(3)) === 1
+    val pred = Similarity.allowedThirds
     // truth scan launched on the pooled thread (guide §2.6): the
     // exact scan is independent of every build/ingest artifact,
     // so the whole lifecycle below overlaps it; awaited at the join
@@ -1564,14 +1453,8 @@ object StreamingAnn {
       // materialized shortlist (bit-equal per np to the per-np serve)
       val rr = sweepRerankedIncremental(spark, store,
         codesDir.toString, qv, qId = 0L, npMax = 4, pred = Some(pred))
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally graft.store.ModelStore.deleteRecursively(codesDir)
   }
 
@@ -1579,12 +1462,10 @@ object StreamingAnn {
     * base ∪ increments, with the full lifecycle composition: the
     * winners rule, tombstones, an optional allowed-set predicate, and
     * the as-of cut all resolve BEFORE the shared probe+ADC-bound+
-    * exact-threshold body, which dispatches on the pinned version's
-    * encoding variant ([[Similarity.ivfPqRangeSearchOver]] /
-    * [[Similarity.ivfPqRangeSearchResidualOver]]) — the r13 raw-only
-    * refusal closed (VERDICT r13 #3): the residual ADC value bounds
-    * the same global radius once each probed cell's own table has
-    * scored its candidates. */
+    * exact-threshold body ([[Similarity.ivfPqRangeSearchOver]]), which
+    * scores with the pinned version's encoding variant — the residual
+    * ADC value bounds the same global radius once each probed cell's
+    * own table has scored its candidates (VERDICT r13 #3). */
   def rangeSearchIncremental(spark: SparkSession, store: ModelStore,
       codesPath: String, qVec: Map[Int, Double], qId: Long = -1L,
       minSim: Double = 0.2, nprobe: Int = 2, m: Int = 4,
@@ -1593,16 +1474,9 @@ object StreamingAnn {
       tombPath: Option[String] = None,
       pred: Option[org.apache.spark.sql.Column] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val (coded0, vectors, variant, ld) =
-      unionServeFrames(spark, store, codesPath, version, tombPath, asOf)
-    val coded = pred.map(coded0.filter).getOrElse(coded0)
-    if (variant == "residual")
-      Similarity.ivfPqRangeSearchResidualOver(ld("coarse"), coded,
-        vectors, ld("codebooks"), qVec, qId, minSim, nprobe, m, dim,
-        adcSlack)
-    else
-      Similarity.ivfPqRangeSearchOver(ld("coarse"), coded, vectors,
-        ld("codebooks"), qVec, qId, minSim, nprobe, m, dim, adcSlack)
+    Similarity.ivfPqRangeSearchOver(
+      unionServeFrames(spark, store, codesPath, version, tombPath, asOf,
+        pred), qVec, qId, minSim, nprobe, m, dim, adcSlack)
   }
 
   /** Driver-contract query (`q_ann_range_inc`): the radius query over
@@ -1659,14 +1533,8 @@ object StreamingAnn {
       // materialized shortlist (bit-equal per np to the per-np serve)
       val rr = sweepRerankedAt(spark, store, codesDir.toString,
         tagDir.toString, "run-7", qv, qId = 0L, npMax = 4)
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally {
       graft.store.ModelStore.deleteRecursively(codesDir)
       graft.store.ModelStore.deleteRecursively(tagDir)
@@ -1737,14 +1605,8 @@ object StreamingAnn {
       val rr = RunTags.sweepRerankedAtRun(spark, "train-15", store,
         codesDir.toString, relTagDir.toString, idxTagDir.toString,
         qv, qId = 0L, npMax = 4)
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally Seq(codesDir, relTagDir, idxTagDir)
       .foreach(graft.store.ModelStore.deleteRecursively)
   }
@@ -1805,14 +1667,8 @@ object StreamingAnn {
         // materialized shortlist (bit-equal per np to the per-np serve)
         val rr = sweepRerankedAuto(spark, store, codesDir.toString,
           qv, qId = 0L, npMax = 4, tombPath = Some(tombDir.toString))
-        graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-          Similarity.sweepTopK(rr, np, 10)
-            .join(truthF(), "vec_id")
-            .agg(count(lit(1)).as("n_hits"))
-            .select(lit(np).as("nprobe"), lit(10).as("k"),
-              col("n_hits"),
-              (col("n_hits").cast("double") / 10).as("recall"))
-        }.reduce(_ union _).orderBy("nprobe"))
+        graft.Materialize.checkpoint(
+          Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
       }
     } finally dirs.foreach(graft.store.ModelStore.deleteRecursively)
   }
@@ -1897,14 +1753,8 @@ object StreamingAnn {
         // materialized shortlist (bit-equal per np to the per-np serve)
         val rr = sweepRerankedAuto(spark, store, codesDir.toString,
           qv, qId = 0L, npMax = 4)
-        graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-          Similarity.sweepTopK(rr, np, 10)
-            .join(truthF(), "vec_id")
-            .agg(count(lit(1)).as("n_hits"))
-            .select(lit(np).as("nprobe"), lit(10).as("k"),
-              col("n_hits"),
-              (col("n_hits").cast("double") / 10).as("recall"))
-        }.reduce(_ union _).orderBy("nprobe"))
+        graft.Materialize.checkpoint(
+          Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
       }
     } finally Seq(codesDir, monDir, rawDir, tagDir)
       .foreach(graft.store.ModelStore.deleteRecursively)
@@ -1920,15 +1770,14 @@ object StreamingAnn {
     * lifecycle op on the radius serve is hash-pinned to the plain
     * radius chain over the surviving candidates). */
   def annRangeFilteredQuery(spark: SparkSession, dir: String): DataFrame =
-    rangeLifecycleQuery(spark, dir,
-      pred = Some(pmod(col("vec_id"), lit(3)) === 1))
+    rangeLifecycleQuery(spark, dir, pred = Some(Similarity.allowedThirds))
 
   def annRangeAsOfQuery(spark: SparkSession, dir: String): DataFrame =
     rangeLifecycleQuery(spark, dir, asOf = Some(1L))
 
   def annRangeResidualIncrementalQuery(spark: SparkSession,
       dir: String): DataFrame =
-    rangeLifecycleQuery(spark, dir, residual = true)
+    rangeLifecycleQuery(spark, dir, variant = "residual")
 
   def annRangeDeletedQuery(spark: SparkSession, dir: String): DataFrame = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -1956,14 +1805,12 @@ object StreamingAnn {
 
   private def rangeLifecycleQuery(spark: SparkSession, dir: String,
       pred: Option[org.apache.spark.sql.Column] = None,
-      asOf: Option[Long] = None, residual: Boolean = false): DataFrame = {
+      asOf: Option[Long] = None, variant: String = "raw"): DataFrame = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val codesDir = java.nio.file.Files
       .createTempDirectory("graft-annrlc-codes-")
     try {
-      val store =
-        if (residual) Similarity.sharedResidualQuantizers(spark, dir)
-        else Similarity.sharedQuantizers(spark, dir)
+      val store = Similarity.sharedQuantizers(spark, dir, variant)
       (0 until 3).foreach { b =>
         annIngestBatch(spark, store, codesDir.toString)(
           emb.filter(pmod(col("vec_id"), lit(3)) === b), b.toLong)
@@ -2062,14 +1909,8 @@ object StreamingAnn {
       // materialized shortlist (bit-equal per np to the per-np serve)
       val rr = sweepRerankedIncremental(spark, store,
         codesDir.toString, qv, qId = 0L, npMax = 4, asOf = Some(1L))
-      graft.Materialize.checkpoint(Seq(1, 2, 4).map { np =>
-        Similarity.sweepTopK(rr, np, 10)
-          .join(truthF(), "vec_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), lit(10).as("k"),
-            col("n_hits"),
-            (col("n_hits").cast("double") / 10).as("recall"))
-      }.reduce(_ union _).orderBy("nprobe"))
+      graft.Materialize.checkpoint(
+        Similarity.recallRows(rr, truthF, Seq(1, 2, 4), 10))
     } finally graft.store.ModelStore.deleteRecursively(codesDir)
   }
 }

@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Ad-hoc stage profiler for slow queries (dev tool; body rotates to
-  * whatever is under investigation). Current body (round 15, first
-  * optimization round): JOB-LEVEL attribution inside the heavy
-  * lifecycle gates — Bench's one number per query can't say whether
-  * q_ann_autopilot's ~18 s goes to the truth scan, the per-batch
-  * encodes, the compaction folds, the GC/purge metadata work, or the
-  * recall sweep probes. A SparkListener records every job's duration
-  * and the action call site (stage name), printed per query sorted by
-  * cost, plus the driver-side gap (wall − sum(jobs)) which is where
-  * planning/driver file IO hides. */
+  * whatever is under investigation). Current battery: every IVF-PQ
+  * gate (build, serve, recall and lifecycle rows of both encoding
+  * variants) — JOB-LEVEL attribution inside each, since Bench's one
+  * number per query can't say whether a gate's time goes to the truth
+  * scan, the per-batch encodes, the compaction folds, or the sweep. A
+  * SparkListener records every job's duration and the action call site
+  * (stage name), printed per query sorted by cost, plus the driver-side
+  * gap (wall − sum(jobs)) which is where planning/driver file IO
+  * hides. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
@@ -46,45 +46,18 @@ object Profile {
       }
     })
 
-    val targets: Seq[(String, () => Long)] = Seq(
-      // round-16 battery: the release/multimodal ingest tier (VERDICT
-      // r15 #1), the batched/range inc gates (#3), and the e2e rows (#2/#6)
-      "q_corpus_release_inc" -> (() =>
-        graft.streaming.StreamingRelease.corpusReleaseIncrementalQuery(spark, sfDir).count()),
-      "q_corpus_release_folded" -> (() =>
-        graft.streaming.StreamingRelease.corpusReleaseFoldedQuery(spark, sfDir).count()),
-      "q_corpus_release_pinned" -> (() =>
-        graft.streaming.StreamingRelease.corpusReleasePinnedQuery(spark, sfDir).count()),
-      "q_corpus_release_asof" -> (() =>
-        graft.streaming.StreamingRelease.corpusReleaseAsOfQuery(spark, sfDir).count()),
-      "q_corpus_release_takedown" -> (() =>
-        graft.streaming.StreamingRelease.corpusReleaseTakedownQuery(spark, sfDir).count()),
-      "q_multimodal_release_folded" -> (() =>
-        graft.streaming.StreamingRelease.multimodalReleaseFoldedQuery(spark, sfDir).count()),
-      "q_multimodal_release_inc" -> (() =>
-        graft.streaming.StreamingRelease.multimodalReleaseIncrementalQuery(spark, sfDir).count()),
-      "q_release_diff" -> (() =>
-        graft.streaming.StreamingRelease.releaseDiffQuery(spark, sfDir).count()),
-      "q_xent_gate_lang" -> (() =>
-        graft.streaming.StreamingRelease.xentGateByLangQuery(spark, sfDir).count()),
-      "q_corpus_release" -> (() =>
-        graft.llm.TextOps.corpusRelease(spark, sfDir).count()),
-      "q_pipeline_e2e" -> (() =>
-        graft.jobs.Pipeline.pipelineE2E(spark, sfDir).count()),
-      "q_curation_e2e" -> (() =>
-        graft.SparkEntry.queries("q_curation_e2e")(spark, sfDir).count()),
-      "q_ivfpq_batch_inc" -> (() =>
-        graft.streaming.StreamingAnn.ivfPqBatchIncrementalQuery(spark, sfDir).count()),
-      "q_ann_range_residual_inc" -> (() =>
-        graft.SparkEntry.queries("q_ann_range_residual_inc")(spark, sfDir).count()),
-      "q_ann_range_inc" -> (() =>
-        graft.streaming.StreamingAnn.annRangeIncrementalQuery(spark, sfDir).count()),
-      // k-means training job count (VERDICT r15 #5)
-      "q_ivf_train" -> (() =>
-        graft.llm.Similarity.ivfTrainQuery(spark, sfDir).count()),
-      "q_pq_train" -> (() =>
-        graft.llm.Similarity.pqTrainQuery(spark, sfDir).count())
-    )
+    // the IVF-PQ battery: every declared build/serve/recall gate of the
+    // ANN stack, both encoding variants, resolved from the driver surface.
+    // Sorted, so any tree runs it in the same order: a gate's job count
+    // depends on which shared stores the gates before it already loaded
+    val annGates = Seq("q_ivfpq_", "q_ann_recall", "q_ann_filtered",
+      "q_ann_range", "q_ann_residual_inc", "q_ann_compacted", "q_ann_asof",
+      "q_ann_tagged", "q_ann_run", "q_ann_deleted", "q_ann_retained",
+      "q_ann_autopilot")
+    val targets: Seq[(String, () => Long)] = graft.SparkEntry.queries.toSeq
+      .filter { case (n, _) => annGates.exists(n.startsWith) }
+      .sortBy(_._1)
+      .map { case (n, q) => n -> (() => q(spark, sfDir).count()) }
     val only = sys.env.get("SPARK_GRAFT_PROFILE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // any declared query not in the battery above resolves straight

@@ -151,7 +151,8 @@ class ModelStoreSpec extends AnyFunSuite {
     for (dir <- Seq(sfDir, "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val raw = llm.Similarity.annRecall(spark, dir).collect()
         .map(r => r.getInt(0) -> r.getDouble(3)).toMap
-      val res = llm.Similarity.annRecallResidual(spark, dir).collect()
+      val res = llm.Similarity.annRecall(spark, dir, variant = "residual")
+        .collect()
         .map(r => r.getInt(0) -> r.getDouble(3)).toMap
       assert(res.keySet === raw.keySet)
       raw.foreach { case (np, rr) =>
@@ -165,37 +166,139 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("cross-variant serving refuses: raw paths reject a residual store and vice versa", Slow) {
-    // raw ADC tables scored against residual codes (or vice versa)
-    // return silently wrong neighbors — the guard must fail LOUD
+  test("the one entry point serves a raw and a residual store, each equal to the pre-merge variant-specific output") {
+    // outputs recorded from the former separate raw and residual
+    // serve/encode paths, before they were folded into one (same
+    // sf0.001 corpus, same dials): the variant-threaded bodies must
+    // reproduce each one exactly. A
+    // small rerank budget keeps the ADC tables decisive, so a residual
+    // store scored with raw tables (or vice versa) would not match.
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qv = llm.Similarity.queryVecOf(emb, 0L)
-    withStore { store =>
-      llm.Similarity.saveIvfPqResidualIndex(emb, store)
-      for ((name, body) <- Seq[(String, () => Any)](
-        "search" -> (() =>
-          llm.Similarity.ivfPqSearchPersisted(store, qv, qId = 0L)),
-        "knnJoin" -> (() => llm.Similarity
-          .ivfPqKnnJoin(store, emb.filter(col("vec_id") < 2))),
-        "encode" -> (() => llm.Similarity.encodeWithIndex(store, emb)))) {
-        val e = intercept[IllegalArgumentException](body())
-        assert(e.getMessage.contains("residual"), s"$name: ${e.getMessage}")
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq
+    val expected = Map(
+      "raw" -> Seq(
+        Seq("[12,0.311027232]", "[232,0.267338434]", "[468,0.219540089]",
+          "[338,0.079863688]", "[119,0.068351782]", "[307,0.04303779]"),
+        Seq("[0,12,0.311027232,1]", "[0,232,0.267338434,2]",
+          "[0,468,0.219540089,3]", "[1,257,0.391762028,1]",
+          "[1,129,0.351479863,2]", "[1,455,0.282430865,3]"),
+        Seq("[17]", "[225]", "[12]", "[483]", "[260]", "[73]", "[212]",
+          "[347]", "[402]", "[299]", "[232]", "[497]", "[82]", "[59]",
+          "[394]", "[71]", "[262]", "[493]", "[340]", "[421]", "[346]",
+          "[468]", "[104]", "[244]", "[350]", "[3]", "[155]", "[19]", "[67]"),
+        Seq("[100,0,1,4,7,3]", "[101,2,7,3,5,4]", "[102,3,7,1,6,2]",
+          "[103,1,3,4,3,4]")),
+      "residual" -> Seq(
+        Seq("[17,0.334456281]", "[82,0.24940016]", "[155,0.204475883]",
+          "[423,0.146184301]", "[431,0.096459974]", "[72,0.083214717]"),
+        Seq("[0,17,0.334456281,1]", "[0,82,0.24940016,2]",
+          "[0,155,0.204475883,3]", "[1,455,0.282430865,1]",
+          "[1,247,0.261461905,2]", "[1,499,0.180643012,3]"),
+        Seq("[17]", "[225]", "[12]", "[483]", "[260]", "[73]", "[212]",
+          "[347]", "[402]", "[299]", "[232]", "[497]", "[82]", "[59]",
+          "[394]", "[71]", "[262]", "[493]", "[340]", "[421]", "[346]",
+          "[468]", "[104]", "[244]", "[350]", "[3]", "[155]", "[19]", "[67]"),
+        Seq("[100,0,4,4,7,3]", "[101,2,7,3,5,4]", "[102,3,4,1,1,2]",
+          "[103,1,3,4,3,7]")))
+    for ((variant, Seq(search, knn, range, encode)) <- expected)
+      withStore { store =>
+        llm.Similarity.saveIvfPqIndex(emb, store, variant = variant)
+        assert(rows(llm.Similarity.ivfPqSearchPersisted(store, qv,
+          qId = 0L, rerankK = 3)) === search, variant)
+        assert(rows(llm.Similarity.ivfPqKnnJoin(store,
+          emb.filter(col("vec_id") < 2), topK = 3, rerankK = 3)) === knn,
+          variant)
+        assert(rows(llm.Similarity.ivfPqRangeSearch(store, qv, qId = 0L,
+          adcSlack = 1.0).select("vec_id")) === range, variant)
+        assert(rows(llm.Similarity.encodeWithIndex(store,
+          emb.filter(col("vec_id").between(100, 103))).drop("ux")
+          .orderBy("vec_id", "cid")) === encode, variant)
+      }
+  }
+
+  test("persisted serve and encode read _CURRENT once: a pointer flip after the first part load cannot mix versions") {
+    // a rebuild that lands mid-call flips _CURRENT between part loads;
+    // every part, the spill and the variant must still come from the
+    // version the call started on
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val qv = llm.Similarity.queryVecOf(emb, 0L)
+    val dir = Files.createTempDirectory("graft-modelstore-pin-")
+    val root = graft.store.Pointer.localDir(dir.toString)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // a store whose _CURRENT flips v0 → v1 right after its first part load
+    def flipping(): ModelStore = {
+      graft.store.Pointer.write(root, "_CURRENT", "0")
+      new ModelStore(spark, dir.toString) {
+        private var armed = true
+        override def loadAt(v: Long, part: String): DataFrame = {
+          val df = super.loadAt(v, part)
+          if (armed) {
+            armed = false
+            graft.store.Pointer.write(root, "_CURRENT", "1")
+          }
+          df
+        }
       }
     }
+    try {
+      val plain = new ModelStore(spark, dir.toString)
+      llm.Similarity.saveIvfPqIndex(emb, plain) // v0
+      // v1: a differently trained index (other corpus, other nlist)
+      llm.Similarity.saveIvfPqIndex(emb.filter(col("vec_id") % 2 === 1),
+        plain, kCells = 3)
+      val search1 = rows(llm.Similarity.ivfPqSearchPersisted(plain, qv,
+        qId = 0L))
+      val enc1 = rows(llm.Similarity.encodeWithIndex(plain, emb.limit(16)))
+      graft.store.Pointer.write(root, "_CURRENT", "0")
+      val search0 = rows(llm.Similarity.ivfPqSearchPersisted(plain, qv,
+        qId = 0L))
+      val enc0 = rows(llm.Similarity.encodeWithIndex(plain, emb.limit(16)))
+      // the two versions answer differently, so a mixed read is visible
+      assert(search1 !== search0)
+      assert(enc1 !== enc0)
+      val s = flipping()
+      assert(rows(llm.Similarity.ivfPqSearchPersisted(s, qv, qId = 0L)) ===
+        search0)
+      assert(s.currentVersion === Some(1L), "the pointer never flipped")
+      val e = flipping()
+      assert(rows(llm.Similarity.encodeWithIndex(e, emb.limit(16))) === enc0)
+      assert(e.currentVersion === Some(1L), "the pointer never flipped")
+    } finally ModelStore.deleteRecursively(dir)
+  }
+
+  test("an unknown encoding variant is refused at build and at serve, never treated as raw") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // build: a misspelled variant used to fall through to a raw build
+    withStore { store =>
+      withStore { driftStore =>
+        val e = intercept[IllegalArgumentException](
+          streaming.StreamingAnn.buildIndexWithDriftReference(emb, store,
+            driftStore, variant = "Residual"))
+        assert(e.getMessage.contains("Residual"), e.getMessage)
+        assert(store.currentVersion.isEmpty, "a build ran anyway")
+      }
+    }
+    // serve: a dials record naming an unknown variant used to be scored
+    // with raw ADC tables by the live-index serves
     withStore { store =>
       llm.Similarity.saveIvfPqIndex(emb, store)
-      for ((name, body) <- Seq[(String, () => Any)](
-        "search" -> (() => llm.Similarity
-          .ivfPqSearchResidualPersisted(store, qv, qId = 0L)),
-        "encode" -> (() =>
-          llm.Similarity.encodeResidualWithIndex(store, emb)))) {
-        val e = intercept[IllegalArgumentException](body())
-        assert(e.getMessage.contains("raw"), s"$name: ${e.getMessage}")
-      }
-      // the DISPATCHED encode never hits the guard: it reads the dial
-      // and runs the matching encoder on either variant
-      assert(llm.Similarity.encodeForIndex(store, emb.limit(4))
-        .count() === 4L)
+      val v = store.currentVersion.get
+      store.save(Map("dials" ->
+          store.load("dials").withColumn("variant", lit("Residual"))),
+        copied = store.partNames.filter(_ != "dials")
+          .map(p => p -> (store, v)).toMap)
+      val qv = llm.Similarity.queryVecOf(emb, 0L)
+      val codesDir = Files.createTempDirectory("graft-modelstore-codes-")
+      try {
+        for (serve <- Seq[() => Any](
+          () => llm.Similarity.ivfPqSearchPersisted(store, qv, qId = 0L),
+          () => streaming.StreamingAnn.searchIncremental(spark, store,
+            codesDir.toString, qv, qId = 0L))) {
+          val e = intercept[IllegalArgumentException](serve())
+          assert(e.getMessage.contains("Residual"), e.getMessage)
+        }
+      } finally ModelStore.deleteRecursively(codesDir)
     }
   }
 
@@ -227,31 +330,31 @@ class ModelStoreSpec extends AnyFunSuite {
 
   test("residual shards merge and serve bit-identically to a single residual build", Slow) {
     // saveMergedIndex is variant-agnostic: shards produced by
-    // encodeForIndex against the store's own quantizers match its
+    // encodeWithIndex against the store's own quantizers match its
     // variant by construction, and the union write carries the dials
     // (variant included) forward — so the distributed-build path exists
     // for BOTH encodings
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qv = llm.Similarity.queryVecOf(emb, 0L)
     val single = withStore { store =>
-      llm.Similarity.saveIvfPqResidualIndex(emb, store)
-      llm.Similarity.ivfPqSearchResidualPersisted(store, qv, qId = 0L)
+      llm.Similarity.saveIvfPqIndex(emb, store, variant = "residual")
+      llm.Similarity.ivfPqSearchPersisted(store, qv, qId = 0L)
         .collect().map(_.toString).toSeq
     }
     withStore { store =>
-      llm.Similarity.saveIvfPqResidualIndexTrainedOn(emb, emb.limit(0),
-        store)
+      llm.Similarity.saveIvfPqIndexTrainedOn(emb, emb.limit(0), store,
+        variant = "residual")
       val mid = emb.agg(org.apache.spark.sql.functions.max("vec_id"))
         .first().getLong(0) / 2
       val lo = llm.Similarity
-        .encodeForIndex(store, emb.filter(col("vec_id") <= mid))
+        .encodeWithIndex(store, emb.filter(col("vec_id") <= mid))
       val hi = llm.Similarity
-        .encodeForIndex(store, emb.filter(col("vec_id") > mid))
+        .encodeWithIndex(store, emb.filter(col("vec_id") > mid))
       val v = llm.Similarity.saveMergedIndex(store, Seq(lo, hi))
       assert(store.currentVersion === Some(v))
       assert(llm.Similarity.indexVariant(store) === "residual")
       val merged = llm.Similarity
-        .ivfPqSearchResidualPersisted(store, qv, qId = 0L)
+        .ivfPqSearchPersisted(store, qv, qId = 0L)
         .collect().map(_.toString).toSeq
       assert(merged === single)
     }
@@ -290,13 +393,14 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("batched IVF-PQ serve equals the single-query path, query by query", Slow) {
+  test("batched IVF-PQ serve equals the single-query path, query by query, both variants") {
     // the batch path replaces the driver-side probe/distance-table steps
-    // with relational joins; at equal dials the two must serve the same
+    // with relational joins (per-(query, cell) residual tables on a
+    // residual index); at equal dials the two must serve the same
     // neighbors with the same scores
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    withStore { store =>
-      llm.Similarity.saveIvfPqIndex(emb, store)
+    for (variant <- Seq("raw", "residual")) withStore { store =>
+      llm.Similarity.saveIvfPqIndex(emb, store, variant = variant)
       val batch = llm.Similarity
         .ivfPqKnnJoin(store, emb.filter(col("vec_id") < 8),
           topK = 10, nprobe = 2, rerankK = 100)
@@ -309,7 +413,7 @@ class ModelStoreSpec extends AnyFunSuite {
           .ivfPqSearchPersisted(store, llm.Similarity.queryVecOf(emb, q),
             qId = q, topK = 10, nprobe = 2, rerankK = 100)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(batch(q) === single, s"query $q diverged")
+        assert(batch(q) === single, s"$variant query $q diverged")
       }
       // external-batch contract: excludeSelf=false keeps the id-colliding
       // corpus vector — each query's own vector is its unit-cosine top hit
@@ -321,52 +425,8 @@ class ModelStoreSpec extends AnyFunSuite {
       assert(ext.length === 4)
       ext.foreach { case (qid, vid, sim) =>
         assert(vid === qid && sim === 1.0,
-          s"query $qid top hit was ($vid, $sim), expected itself at 1.0")
+          s"$variant query $qid top hit was ($vid, $sim), expected itself at 1.0")
       }
-    }
-  }
-
-  test("batched RESIDUAL serve equals the residual single-query path, query by query", Slow) {
-    // the residual twin of the raw batch==single gate: per-(query, cell)
-    // residual distance tables as relational joins must reproduce the
-    // driver-side per-cell tables of ivfPqSearchResidualPersisted
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    withStore { store =>
-      llm.Similarity.saveIvfPqResidualIndex(emb, store)
-      val batch = llm.Similarity
-        .ivfPqKnnJoinResidual(store, emb.filter(col("vec_id") < 8),
-          topK = 10, nprobe = 2, rerankK = 100)
-        .collect()
-        .groupBy(_.getLong(0))
-        .view.mapValues(_.sortBy(_.getInt(3))
-          .map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
-      (0L until 8L).foreach { q =>
-        val single = llm.Similarity
-          .ivfPqSearchResidualPersisted(store,
-            llm.Similarity.queryVecOf(emb, q), qId = q, topK = 10,
-            nprobe = 2, rerankK = 100)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        assert(batch(q) === single, s"query $q diverged")
-      }
-      // external-batch contract holds on the residual path too
-      val ext = llm.Similarity
-        .ivfPqKnnJoinResidual(store, emb.filter(col("vec_id") < 4),
-          topK = 3, nprobe = 2, rerankK = 100, excludeSelf = false)
-        .filter(col("rnk") === 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(ext.length === 4)
-      ext.foreach { case (qid, vid, sim) =>
-        assert(vid === qid && sim === 1.0,
-          s"query $qid top hit was ($vid, $sim), expected itself at 1.0")
-      }
-    }
-    // and the variant guard refuses a raw store
-    withStore { store =>
-      llm.Similarity.saveIvfPqIndex(emb, store)
-      val e = intercept[IllegalArgumentException](
-        llm.Similarity.ivfPqKnnJoinResidual(store,
-          emb.filter(col("vec_id") < 2)))
-      assert(e.getMessage.contains("raw"), e.getMessage)
     }
   }
 

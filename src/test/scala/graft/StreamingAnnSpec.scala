@@ -60,9 +60,10 @@ class StreamingAnnSpec extends AnyFunSuite {
         .join(store.load("vectors"), "vec_id")
         .unionByName(llm.Similarity.encodeWithIndex(store,
           inc1.unionByName(inc2)))
-      val batch = llm.Similarity.ivfPqSearchOver(store.load("coarse"),
-        unionCoded, unionCoded.select("vec_id", "ux"),
-        store.load("codebooks"), qVec, qId = 0L)
+      val batch = llm.Similarity.ivfPqSearchOver(llm.Similarity
+        .IndexFrames(store.load("coarse"), unionCoded,
+          unionCoded.select("vec_id", "ux"), store.load("codebooks"),
+          "raw"), qVec, qId = 0L)
         .collect().map(_.toString).toSeq
       assert(incremental === batch)
 
@@ -421,7 +422,8 @@ class StreamingAnnSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") < cut)
     val inc = emb.filter(col("vec_id") >= cut)
     withDirs { (store, codesPath) =>
-      llm.Similarity.saveIvfPqResidualIndexTrainedOn(base, base, store)
+      llm.Similarity.saveIvfPqIndexTrainedOn(base, base, store,
+        variant = "residual")
       assert(llm.Similarity.indexVariant(store) === "residual")
       val qVec = llm.Similarity.queryVecOf(emb, 0L)
       StreamingAnn.annIngestBatch(spark, store, codesPath)(inc, 0L)
@@ -429,9 +431,10 @@ class StreamingAnnSpec extends AnyFunSuite {
       // == one batch residual build over the union at the same frozen
       // quantizers (trained on base, encoding everything)
       withDirs { (store2, _) =>
-        llm.Similarity.saveIvfPqResidualIndexTrainedOn(base, emb, store2)
+        llm.Similarity.saveIvfPqIndexTrainedOn(base, emb, store2,
+          variant = "residual")
         val batch = llm.Similarity
-          .ivfPqSearchResidualPersisted(store2, qVec, qId = 0L)
+          .ivfPqSearchPersisted(store2, qVec, qId = 0L)
           .collect().map(_.toString).toSeq
         assert(streamed === batch)
       }
@@ -517,7 +520,8 @@ class StreamingAnnSpec extends AnyFunSuite {
       check(store, codesPath)
     }
     withDirs { (store, codesPath) =>
-      llm.Similarity.saveIvfPqResidualIndexTrainedOn(base, base, store)
+      llm.Similarity.saveIvfPqIndexTrainedOn(base, base, store,
+        variant = "residual")
       StreamingAnn.annIngestBatch(spark, store, codesPath)(inc, 0L)
       check(store, codesPath)
     }
@@ -569,7 +573,8 @@ class StreamingAnnSpec extends AnyFunSuite {
       }
     run(store => { llm.Similarity.saveIvfPqIndex(base, store); () })
     run(store => {
-      llm.Similarity.saveIvfPqResidualIndexTrainedOn(base, base, store)
+      llm.Similarity.saveIvfPqIndexTrainedOn(base, base, store,
+        variant = "residual")
       ()
     })
   }
@@ -836,9 +841,10 @@ class StreamingAnnSpec extends AnyFunSuite {
       // == one batch encode of the SURVIVORS under the same quantizers
       val survivors = llm.Similarity.encodeWithIndex(store,
         emb.filter(col("vec_id") =!= nn1))
-      val batch = llm.Similarity.ivfPqSearchOver(store.load("coarse"),
-        survivors, survivors.select("vec_id", "ux"),
-        store.load("codebooks"), qVec, qId = 0L)
+      val batch = llm.Similarity.ivfPqSearchOver(llm.Similarity
+        .IndexFrames(store.load("coarse"), survivors,
+          survivors.select("vec_id", "ux"), store.load("codebooks"),
+          "raw"), qVec, qId = 0L)
         .collect().map(_.toString).toSeq
       assert(after === batch)
 
@@ -1046,9 +1052,10 @@ class StreamingAnnSpec extends AnyFunSuite {
       // frozen quantizers (pred and tombstone compose, not conflict)
       val survivors = llm.Similarity.encodeWithIndex(store,
         emb.filter(col("vec_id") =!= victim))
-      val batch = llm.Similarity.ivfPqSearchOver(store.load("coarse"),
-        survivors.filter(pred), survivors.select("vec_id", "ux"),
-        store.load("codebooks"), qVec, qId = 0L)
+      val batch = llm.Similarity.ivfPqSearchOver(llm.Similarity
+        .IndexFrames(store.load("coarse"), survivors.filter(pred),
+          survivors.select("vec_id", "ux"), store.load("codebooks"),
+          "raw"), qVec, qId = 0L)
         .collect().map(_.toString).toSeq
       assert(after === batch)
     }
@@ -1071,10 +1078,10 @@ class StreamingAnnSpec extends AnyFunSuite {
       // == the batch radius query over the same encoded corpus (the
       // pointwise-encoding invisibility, radius edition)
       val survivors = llm.Similarity.encodeWithIndex(store, emb)
-      val batch = llm.Similarity.ivfPqRangeSearchOver(
-        store.load("coarse"), survivors,
-        survivors.select("vec_id", "ux"), store.load("codebooks"),
-        qVec, qId = 0L)
+      val batch = llm.Similarity.ivfPqRangeSearchOver(llm.Similarity
+        .IndexFrames(store.load("coarse"), survivors,
+          survivors.select("vec_id", "ux"), store.load("codebooks"),
+          "raw"), qVec, qId = 0L)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(live === batch)
       // a deleted member leaves the radius set, the rest is unchanged
@@ -1083,16 +1090,18 @@ class StreamingAnnSpec extends AnyFunSuite {
         emb.filter(col("vec_id") === victim), 2L)
       assert(range() === live.filterNot(_._1 == victim))
     }
-    // residual stores DISPATCH to the residual radius body (r14 closed
-    // the r13 raw-only refusal): the live serve equals the persisted
-    // residual radius query bit-identically (pointwise encoding)
+    // residual stores serve the radius through the same body with
+    // per-cell tables (r14 closed the r13 raw-only refusal): the live
+    // serve equals the persisted residual radius query bit-identically
+    // (pointwise encoding)
     withDirs { (store, codesPath) =>
-      llm.Similarity.saveIvfPqResidualIndexTrainedOn(emb, emb, store)
-      val persisted = llm.Similarity.ivfPqRangeSearchResidual(store,
+      llm.Similarity.saveIvfPqIndexTrainedOn(emb, emb, store,
+        variant = "residual")
+      val persisted = llm.Similarity.ivfPqRangeSearch(store,
         qVec, qId = 0L).collect().map(_.toString).toSeq
       withDirs { (live, liveCodes) =>
-        llm.Similarity.saveIvfPqResidualIndexTrainedOn(emb,
-          emb.limit(0), live)
+        llm.Similarity.saveIvfPqIndexTrainedOn(emb,
+          emb.limit(0), live, variant = "residual")
         StreamingAnn.annIngestBatch(spark, live, liveCodes)(emb, 0L)
         assert(StreamingAnn.rangeSearchIncremental(spark, live,
           liveCodes, qVec, qId = 0L)
